@@ -270,12 +270,6 @@ def register_snapshot_table(
     return df
 
 
-def snapshot_table_root(name: str) -> str | None:
-    """Manifest root a snapshot view was registered from (None if the
-    name is not a registered snapshot table)."""
-    return _SNAPSHOT_ROOTS.get(name)
-
-
 def register_snapshot_table_cbo(
     spark: SparkSession,
     name: str,

@@ -194,19 +194,6 @@ def _verified_pairs(
     )
 
 
-def exact_jaccard_from_hash_sets(pairs: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jacc): exact Jaccard over the two shingle-hash-set
-    columns ``sh_a``/``sh_b``, rounded to 6 (SURVEY §5.3)."""
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    return pairs.select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            inter / (F.size("sh_a") + F.size("sh_b") - inter), 6
-        ).alias("jacc"),
-    )
-
-
 def minhash_lsh_incremental_pairs(
     snapshot: DataFrame,
     batch: DataFrame,

@@ -1996,29 +1996,6 @@ def _stats_overlap_all(stats, ranges: dict) -> bool:
     return True
 
 
-def _key_file_range(root: str, key_files: list[str], key: str):
-    """(min, max) across equality-delete key files — a driver-side
-    pyarrow read of files that are small by construction (one column,
-    one row per deleted key). (None, None) disables pruning."""
-    try:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        lo = hi = None
-        for p in key_files:
-            col = pq.read_table(
-                os.path.join(root, p), columns=[key]
-            ).column(key)
-            if len(col) == 0 or col.null_count == len(col):
-                continue
-            mm = pc.min_max(col).as_py()
-            lo = mm["min"] if lo is None else min(lo, mm["min"])
-            hi = mm["max"] if hi is None else max(hi, mm["max"])
-        return lo, hi
-    except Exception:
-        return None, None
-
-
 def _stats_overlap(st, lo, hi) -> bool:
     """Can a file with recorded [min, max] ``st`` hold a key in
     [lo, hi]? True (candidate) when stats or bounds are absent or

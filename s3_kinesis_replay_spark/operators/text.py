@@ -175,30 +175,3 @@ def rolling_fingerprint(text: Column, base: int = 257, mod: int = 1_000_000_007)
         ),
         lambda acc: acc.getField("h"),
     )
-
-
-def analyze(documents: DataFrame) -> DataFrame:
-    """Full text-analysis projection: language ID + quality + tokens + print."""
-    text = F.col("text")
-    feats = quality_features(text, F.col("n_chars"))
-    scores = language_scores(text)
-    score_cols = [F.col(f"score_{lang}") for lang in LANG_MARKERS]
-    langs = F.array(*[F.lit(lang) for lang in LANG_MARKERS])
-    best = F.element_at(
-        langs,
-        F.array_position(
-            F.array(*score_cols), F.array_max(F.array(*score_cols))
-        ).cast("int"),
-    )
-    return (
-        documents.select("doc_id", "lang", text.alias("text"), F.col("n_chars"), *scores)
-        .withColumns(
-            {
-                **{k: v for k, v in feats.items()},
-                "predicted_lang": best,
-                "fingerprint": rolling_fingerprint(text),
-                "n_tokens_ws": token_count(text),
-            }
-        )
-        .drop("text")
-    )

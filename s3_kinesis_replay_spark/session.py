@@ -10,6 +10,12 @@ Defaults are chosen for the 100 TB design point (SURVEY.md §4):
   timestamp semantics identical to the DuckDB oracle.
 * RocksDB state store — streaming state (dedup, windows, custom state)
   spills off-heap and scales past executor memory.
+* Python workers start through ``pyspark_graft_worker`` (top level, beside
+  this package). On Python 3.10 and 3.11 every task's
+  ``importlib.invalidate_caches()`` re-read pyspark.zip and the spark-core
+  jar, about 200 ms per task; the module re-reads an archive only when it
+  changed. On other Python versions it runs ``pyspark.worker`` unpatched.
+  Executors need the module beside the package, as they need the package.
 
 On a real cluster only ``master`` changes; everything else holds.
 """
@@ -21,6 +27,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# pyspark/daemon.py ignores worker modules whose name does not start with
+# "pyspark"; the daemon imports it from the workers' PYTHONPATH
+WORKER_MODULE = "pyspark_graft_worker"
+WORKER_MODULE_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -37,6 +48,12 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p
+        for p in (conf.get("spark.executorEnv.PYTHONPATH"), WORKER_MODULE_DIR)
+        if p
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -68,7 +85,8 @@ def get_spark(
         # local driver has the full 128 GiB box; harmless on a cluster
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.worker.module", WORKER_MODULE)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
