@@ -281,17 +281,15 @@ def replay_roundtrip_seconds(spark) -> float:
 
 def replay_roundtrip_distributed_seconds(spark) -> float:
     """Same archive → stream round trip, but through the DISTRIBUTED
-    publish path (VERDICT r12 item 2): foreachPartition executor-side
-    publishing, every worker building its own client from the importable
-    factory — the designed 100 TB path (driver-mode collects every batch
-    to one process; this one never does). First baseline recorded r13."""
+    publish path: executor-side publishing from ``mapInArrow`` tasks,
+    every worker building its own client from the importable factory —
+    the designed 100 TB path (driver-mode collects every batch to one
+    process; this one never does)."""
     import shutil
     import tempfile
 
     from s3_kinesis_replay_spark.sources.archive import stage_archive
-    from s3_kinesis_replay_spark.streaming.kinesis_datasource import (
-        read_captured,
-    )
+    from s3_kinesis_replay_spark.streaming.kinesis_sink import read_captured
     from s3_kinesis_replay_spark.streaming.replay import ReplayConfig, run_replay
 
     root = stage_archive(SF_DIR, gz=True)
@@ -306,8 +304,7 @@ def replay_roundtrip_distributed_seconds(spark) -> float:
     q = run_replay(
         spark,
         cfg,
-        "s3_kinesis_replay_spark.streaming.kinesis_datasource:"
-        "file_client_factory",
+        "s3_kinesis_replay_spark.streaming.kinesis_sink:file_client_factory",
         distributed=True,
         client_arg=capture_dir,
     )

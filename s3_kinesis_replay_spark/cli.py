@@ -98,7 +98,7 @@ def build_parser() -> argparse.ArgumentParser:
         help="importable client factory for --sink factory; each process "
         "that publishes (driver, or every executor worker under "
         "--distributed) imports and calls it to build its own client "
-        "(e.g. s3_kinesis_replay_spark.streaming.kinesis_datasource:"
+        "(e.g. s3_kinesis_replay_spark.streaming.kinesis_sink:"
         "file_client_factory)",
     )
     r.add_argument(

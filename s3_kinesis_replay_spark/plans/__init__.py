@@ -1,37 +1,8 @@
-"""Physical-plan inspection helpers (SURVEY §4/§5.4).
+"""Physical-plan inspection (SURVEY §4/§5.4).
 
 The 100 TB design point is enforced by asserting on plans, not hoping:
 broadcast where dims are small, TakeOrdered for top-k, pushed filters and
 pruned schemas at the parquet scan, partial aggregation before shuffles.
-tests/test_operators.py uses these; users can too.
+``plans.audit.audit_plan`` extracts those features; tests and
+``tools/gen_plans.py`` use it.
 """
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame
-
-
-def physical_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def formatted_explain(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in physical_plan(df)
-
-
-def uses_take_ordered(df: DataFrame) -> bool:
-    return "TakeOrderedAndProject" in physical_plan(df)
-
-
-def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    return f"PushedFilters: [{fragment}" in physical_plan(df) or fragment in physical_plan(df)
-
-
-def shuffle_count(df: DataFrame) -> int:
-    return physical_plan(df).count("Exchange ")

@@ -80,12 +80,12 @@ def _drain(spark, stream_df, mode="append", name=None):
     return spark.table(name)
 
 
-def _run_capture_replay(spark, sf_dir, fail_every=0):
+def _run_capture_replay(spark, sf_dir):
     """Replay the staged archive through the Kinesis-shaped sink into an
     in-memory capturing endpoint; returns the captured (key, payload) list
     in arrival order."""
     root = stage_archive(sf_dir, gz=True)
-    client = CapturingClient(fail_every=fail_every)
+    client = CapturingClient()
     cfg = ReplayConfig(
         archive_root=root,
         stream_name="skr-replay",

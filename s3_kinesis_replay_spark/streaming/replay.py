@@ -81,35 +81,6 @@ def build_replay_stream(spark: SparkSession, cfg: ReplayConfig) -> DataFrame:
     ).drop("_key_fallback")
 
 
-def run_replay_datasource(
-    spark: SparkSession,
-    cfg: ReplayConfig,
-    client_factory_path: str,
-    client_arg: str = "",
-):
-    """Replay through the Python DataSource sink (kinesis_datasource.py):
-    executor-side publishing, single-writer-per-key via repartition on the
-    partition key + in-partition (key, seq) sort."""
-    from s3_kinesis_replay_spark.streaming.kinesis_datasource import KinesisDataSource
-
-    spark.dataSource.register(KinesisDataSource)
-    # sortWithinPartitions is illegal on a streaming DF — the writer sorts
-    # its partition by (key, seq) instead (bounded by micro-batch pacing)
-    records = build_replay_stream(spark, cfg).repartition(
-        cfg.num_writers, "partition_key"
-    )
-    writer = (
-        records.writeStream.format("kinesis_replay")
-        .option("stream", cfg.stream_name)
-        .option("client_factory", client_factory_path)
-        .option("client_arg", client_arg)
-        .option("checkpointLocation", cfg.checkpoint_dir)
-        .outputMode("append")
-    )
-    writer = _apply_trigger(writer, cfg)
-    return writer.start()
-
-
 def run_replay(
     spark: SparkSession,
     cfg: ReplayConfig,

@@ -53,13 +53,52 @@ def test_batcher_oversized_record_rejected():
         list(small.batches([("k", b"x" * 2048)]))
 
 
+def _assert_delivery_contract(sent, delivered):
+    """The sink's at-least-once, per-key-ordered contract: every delivered
+    record is an exact copy of a sent one, and keeping the LAST copy of
+    each ``batch_id:seq`` tag in arrival order gives every sent record
+    once, in ascending seq per key."""
+    assert set(delivered) <= set(sent)
+    last = {}
+    for pos, (key, data) in enumerate(delivered):
+        last[(key, data.split(b"|", 1)[0])] = pos
+    kept = [delivered[pos] for pos in sorted(last.values())]
+    assert sorted(kept) == sorted(sent)
+    per_key: dict = {}
+    for key, data in kept:
+        per_key.setdefault(key, []).append(int(data.split(b"|", 1)[0].split(b":")[1]))
+    for key, seqs in per_key.items():
+        assert seqs == sorted(seqs), f"key {key} out of order: {seqs}"
+
+
 def test_publish_retries_partial_failures():
     client = CapturingClient(fail_every=3)  # every 3rd record fails on odd calls
-    recs = [(f"k{i % 5}", f"payload-{i}".encode()) for i in range(100)]
-    n = publish_batch(client, "s", recs)
+    # 100 records on 5 keys, sorted by (key, seq)
+    sent = [
+        (f"k{k}", f"0:{i}|payload-{i}".encode())
+        for k in range(5)
+        for i in range(k, 100, 5)
+    ]
+    n = publish_batch(client, "s", sent)
     assert n == 100
-    assert len(client.records) == 100  # all eventually landed
     assert len(client.calls) > 1  # retries happened
+    _assert_delivery_contract(sent, client.records)
+
+
+def test_driver_mode_partial_failures_keep_per_key_order(spark):
+    from s3_kinesis_replay_spark.streaming.kinesis_sink import (
+        kinesis_foreach_batch,
+    )
+
+    rows = [(f"k{i % 5}", i, f"d{i}") for i in range(100)]
+    batch = spark.createDataFrame(rows, "partition_key string, seq long, data string")
+    client = CapturingClient(fail_every=3)
+    fn = kinesis_foreach_batch(lambda: client, "s", distributed=False)
+    fn(batch, 7)
+    assert len(client.calls) > 1  # retries happened
+    _assert_delivery_contract(
+        [(k, f"7:{s}|{d}".encode()) for k, s, d in rows], client.records
+    )
 
 
 def test_driver_mode_null_key_clear_error(spark):
@@ -134,11 +173,9 @@ def test_distributed_multi_arrow_batch_per_partition_order(spark, tmp_path):
     the in-partition (k, s) sort across batch boundaries."""
     import json
 
-    from s3_kinesis_replay_spark.streaming.kinesis_datasource import (
-        read_captured,
-    )
     from s3_kinesis_replay_spark.streaming.kinesis_sink import (
         kinesis_foreach_batch,
+        read_captured,
     )
 
     capture_dir = str(tmp_path / "captured")
@@ -154,7 +191,7 @@ def test_distributed_multi_arrow_batch_per_partition_order(spark, tmp_path):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
     try:
         fn = kinesis_foreach_batch(
-            "s3_kinesis_replay_spark.streaming.kinesis_datasource:"
+            "s3_kinesis_replay_spark.streaming.kinesis_sink:"
             "file_client_factory",
             "s",
             distributed=True,
@@ -234,8 +271,11 @@ def test_replay_end_to_end_order_and_content(spark, sf_dir, archive_root, tmp_pa
     # per-key ordering: seq strictly increasing within each partition key
     per_key_seqs: dict[str, list[int]] = {}
     for key, data in client.records:
-        tag = data.decode().split("|", 1)[0]  # "batchid:seq"
-        seq = int(tag.split(":")[1])
+        tag, body = data.decode().split("|", 1)  # "batchid:seq|{json}"
+        batch_id, seq = (int(x) for x in tag.split(":"))
+        # the sanitize rule can leave the body invalid JSON: read event_id
+        event_id = body.split('"event_id":')[1].split(",")[0]
+        assert data.startswith(f"{batch_id}:{event_id}|".encode())
         per_key_seqs.setdefault(key, []).append(seq)
     for key, seqs in per_key_seqs.items():
         assert seqs == sorted(seqs), f"out-of-order publish for key {key}"
@@ -279,59 +319,6 @@ def test_replay_checkpoint_resume_no_loss(spark, sf_dir, archive_root, tmp_path)
     # …and duplication bounded by one replayed micro-batch
     assert len(client.records) <= n_expected + 2 * 500
     assert first_run < n_expected  # the kill really was mid-replay
-
-
-def test_a7b_datasource_sink_distributed(spark, sf_dir, tmp_path):
-    """Python DataSource sink (Spark 4): executor-side publishing must
-    deliver the exact input set with per-key ordering (single-writer-per-
-    key repartition + in-partition sort)."""
-    import json
-
-    from s3_kinesis_replay_spark.sources.archive import stage_archive
-    from s3_kinesis_replay_spark.streaming.kinesis_datasource import read_captured
-    from s3_kinesis_replay_spark.streaming.replay import (
-        ReplayConfig,
-        run_replay_datasource,
-    )
-
-    root = stage_archive(sf_dir, gz=True)
-    capture_dir = str(tmp_path / "captured")
-    cfg = ReplayConfig(
-        archive_root=root,
-        stream_name="skr-ds",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=8,
-        num_writers=8,
-    )
-    q = run_replay_datasource(
-        spark,
-        cfg,
-        "s3_kinesis_replay_spark.streaming.kinesis_datasource:file_client_factory",
-        capture_dir,
-    )
-    q.awaitTermination(600)
-
-    captured = read_captured(capture_dir)
-    got_ids = sorted(
-        json.loads(data.decode())["event_id"] for _, data, _ in captured
-    )
-    want_ids = sorted(
-        r["event_id"]
-        for r in spark.read.parquet(f"{sf_dir}/events.parquet").collect()
-    )
-    assert got_ids == want_ids  # exact set, no loss, no dupes (clean run)
-
-    # per-key ordering: within each key, (worker, call-seq, in-call pos)
-    # must be non-decreasing in seq (= event_id)
-    by_key: dict = {}
-    for pos, (key, data, order) in enumerate(captured):
-        eid = json.loads(data.decode())["event_id"]
-        by_key.setdefault(key, []).append((order, pos, eid))
-    for key, entries in by_key.items():
-        workers = {o[0][0] for o in entries}
-        assert len(workers) >= 1
-        seqs = [e for _, _, e in sorted(entries, key=lambda x: (x[0], x[1]))]
-        assert seqs == sorted(seqs), f"key {key} out of order"
 
 
 def test_a7c_moto_kinesis_roundtrip(spark, sf_dir, tmp_path):
@@ -456,7 +443,7 @@ def test_cli_replay_drain_and_key_range(tmp_path):
     assert empty["published"] == 0
 
 
-FACTORY_PATH = "s3_kinesis_replay_spark.streaming.kinesis_datasource:file_client_factory"
+FACTORY_PATH = "s3_kinesis_replay_spark.streaming.kinesis_sink:file_client_factory"
 
 
 def _assert_per_key_order_and_exact_set(spark, sf_dir, capture_dir):
@@ -464,14 +451,17 @@ def _assert_per_key_order_and_exact_set(spark, sf_dir, capture_dir):
     set (no loss/dupes on a clean run) and ascending seq per key."""
     import json as _json
 
-    from s3_kinesis_replay_spark.streaming.kinesis_datasource import read_captured
+    from s3_kinesis_replay_spark.streaming.kinesis_sink import read_captured
 
     captured = read_captured(capture_dir)
     # payload envelope is "batchid:seq|{json}"
     got = []
     for key, data, order in captured:
         tag, body = data.decode().split("|", 1)
-        got.append((key, int(tag.split(":")[1]), _json.loads(body)["event_id"], order))
+        batch_id, seq = (int(x) for x in tag.split(":"))
+        eid = _json.loads(body)["event_id"]
+        assert data.startswith(f"{batch_id}:{eid}|".encode())
+        got.append((key, seq, eid, order))
     want_ids = sorted(
         r["event_id"]
         for r in spark.read.parquet(f"{sf_dir}/events.parquet").collect()
