@@ -3579,6 +3579,21 @@ def _refuse_ambiguous_source(df: DataFrame, kl: list[str], ctx: str) -> None:
         )
 
 
+def _refuse_merge_audit_names(cols: list[str], side: str) -> None:
+    """Clause-form MERGE adds the audit columns ``__n_tot``, ``__clause``
+    and ``__mrgk_<i>`` beside the row's own columns; a row column of that
+    name would silently stop resolving in clause SQL."""
+    bad = [
+        c for c in cols
+        if c in ("__n_tot", "__clause") or c.startswith("__mrgk_")
+    ]
+    if bad:
+        raise ValueError(
+            f"{side} column(s) {bad!r} use a name reserved for clause-form "
+            "MERGE audit columns (__n_tot, __clause, __mrgk_*); rename them"
+        )
+
+
 def snapshot_merge(
     spark: SparkSession,
     root: str,
@@ -3891,6 +3906,7 @@ def snapshot_merge_clauses(
     missing_k = [k for k in kl if k not in source.columns]
     if missing_k:
         raise ValueError(f"source has no key column(s) {missing_k!r}")
+    _refuse_merge_audit_names(source.columns, "source")
     if not clauses:
         raise ValueError("clause-form merge needs at least one clause")
     for c in clauses:
@@ -3941,6 +3957,7 @@ def snapshot_merge_clauses(
         base0 = latest_version(root)
         cur = snapshot_read(spark, root, base0)
         tcols = cur.columns
+        _refuse_merge_audit_names(tcols, "target")
         ttypes = {f.name: f.dataType.simpleString() for f in cur.schema.fields}
         for c in clauses:
             if c["kind"] in ("update", "nbs_update"):

@@ -16,6 +16,15 @@ Defaults are chosen for the 100 TB design point (SURVEY.md §4):
   jar, about 200 ms per task; the module re-reads an archive only when it
   changed. On other Python versions it runs ``pyspark.worker`` unpatched.
   Executors need the module beside the package, as they need the package.
+* Local-filesystem bookkeeping in-process. Without the Hadoop native
+  library, Hadoop's local filesystem starts a ``chmod`` process on every
+  file create and mkdir, and Spark's default (FileContext) streaming
+  checkpoint manager a ``readlink`` per rename. ``jvm/spark-graft-localfs.jar``
+  (Java source beside it, built by ``tools/build_local_fs_jar.py``) binds
+  ``file:`` to a ``LocalFileSystem`` that sets the same mode bits through
+  ``java.nio``, and a checkpoint manager that uses Spark's FileSystem-based
+  manager for ``file:`` checkpoints and Spark's default for every other
+  scheme. On S3 or HDFS nothing forks, so neither changes anything there.
 
 On a real cluster only ``master`` changes; everything else holds.
 """
@@ -24,6 +33,8 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -32,6 +43,30 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # "pyspark"; the daemon imports it from the workers' PYTHONPATH
 WORKER_MODULE = "pyspark_graft_worker"
 WORKER_MODULE_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "spark-graft-localfs.jar"
+)
+LOCAL_FS_CLASS = "org.sparkgraft.localfs.NioLocalFileSystem"
+CHECKPOINT_MANAGER_CLASS = "org.sparkgraft.localfs.LocalCheckpointFileManager"
+
+
+def _append_path(conf: dict[str, str], key: str, path: str) -> None:
+    conf[key] = os.pathsep.join(p for p in (conf.get(key), path) if p)
+
+
+def _local_fs_jar_loadable() -> bool:
+    """The class path is fixed when the JVM starts. A JVM that a session
+    built elsewhere started has no jar, and keeps Hadoop's and Spark's
+    classes."""
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return True
+    try:
+        jvm.java.lang.Class.forName(LOCAL_FS_CLASS)
+    except Py4JError:
+        return False
+    return True
 
 
 def get_spark(
@@ -49,11 +84,14 @@ def get_spark(
     master = master or f"local[{cpus}]"
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     conf = dict(extra_conf or {})
-    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
-        p
-        for p in (conf.get("spark.executorEnv.PYTHONPATH"), WORKER_MODULE_DIR)
-        if p
-    )
+    _append_path(conf, "spark.executorEnv.PYTHONPATH", WORKER_MODULE_DIR)
+    _append_path(conf, "spark.driver.extraClassPath", LOCAL_FS_JAR)
+    _append_path(conf, "spark.executor.extraClassPath", LOCAL_FS_JAR)
+    if _local_fs_jar_loadable():
+        conf.setdefault("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+        conf.setdefault(
+            "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_MANAGER_CLASS
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)

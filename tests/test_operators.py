@@ -5600,6 +5600,37 @@ def test_snapshot_merge_clauses(spark, sf_dir, tmp_path):
     ] == [(2, 5)]
 
 
+def test_snapshot_merge_clauses_refuses_audit_column_names(spark, tmp_path):
+    """A target or source column named like a clause-merge audit column
+    (``__n_tot``, ``__clause``, ``__mrgk_*``) is refused by name instead of
+    silently shadowing the audit column in clause SQL."""
+    import os
+
+    import pytest as _pytest
+
+    from pyspark.sql import functions as F
+
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    upd = [{"kind": "update", "cond": None, "sets": {"v": "s.v"}}]
+
+    def mk(extra: str | None = None):
+        df = spark.range(0, 5).select(F.col("id").alias("k"), F.col("id").alias("v"))
+        return df.withColumn(extra, F.lit(1)) if extra else df
+
+    for name in ("__n_tot", "__clause", "__mrgk_0"):
+        root = str(tmp_path / f"t{name}")
+        tf.snapshot_write(spark, mk(name), root, "overwrite")
+        with _pytest.raises(ValueError, match=f"target column.*'{name}'"):
+            tf.snapshot_merge_clauses(spark, root, mk(), "k", upd)
+        assert tf.latest_version(root) == 1
+    root = str(tmp_path / "src")
+    tf.snapshot_write(spark, mk(), root, "overwrite")
+    with _pytest.raises(ValueError, match="source column.*'__mrgk_1'"):
+        tf.snapshot_merge_clauses(spark, root, mk("__mrgk_1"), "k", upd)
+    assert not [d for d in os.listdir(root) if d.startswith("tmpmerge-")]
+
+
 def test_create_table_refuses_shadowing_existing_view(spark, sf_dir, tmp_path):
     """ADVICE r13: CREATE TABLE ... LOCATION used createOrReplaceTempView
     with no collision check, so `CREATE TABLE events ...` silently

@@ -308,6 +308,13 @@ def test_replay_checkpoint_resume_no_loss(spark, sf_dir, archive_root, tmp_path)
 
     q2 = run_replay(spark, cfg, lambda: client, distributed=False)
     q2.awaitTermination(600)
+    # both runs committed through Spark's FileSystem-based manager
+    # (session default for file: checkpoints)
+    for query in (q, q2):
+        manager = query._jsq.streamingQuery().offsetLog().fileManager()
+        assert manager.delegate().getClass().getSimpleName() == (
+            "FileSystemBasedCheckpointFileManager"
+        )
 
     n_expected = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     # every event delivered at least once…

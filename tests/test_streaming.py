@@ -384,6 +384,13 @@ def test_c2c_streaming_merge_kill_resume(spark, sf_dir, tmp_path):
     )
     q2.awaitTermination(600)
     assert published_batch_id() > 1, "resume applied no further batches"
+    # both runs committed through Spark's FileSystem-based manager
+    # (session default for file: checkpoints)
+    for query in (q, q2):
+        manager = query._jsq.streamingQuery().offsetLog().fileManager()
+        assert manager.delegate().getClass().getSimpleName() == (
+            "FileSystemBasedCheckpointFileManager"
+        )
     # reaping held: current + one grace generation (+ one straggler)
     assert (
         len([d for d in os.listdir(snap_root) if d.startswith("batch-")])
