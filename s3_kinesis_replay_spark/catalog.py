@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -483,7 +484,6 @@ def resolve_time_travel(spark: SparkSession, query: str) -> str:
     textual pre-pass is the same trick Delta's own SQL extension plays
     at parser level, scoped here to known snapshot names."""
     import hashlib
-    import re
 
     from s3_kinesis_replay_spark.operators.table_format import (
         snapshot_as_of,
@@ -580,21 +580,21 @@ def _split_assignments(text: str) -> dict[str, str]:
     return out
 
 
-def _bind_insert_df(spark, root, src_sql: str, df):
-    """Bind an INSERT-family source frame to the target table's
-    recorded schema (shared by INSERT INTO / INSERT OVERWRITE / REPLACE
-    WHERE, r16): VALUES rows bind by POSITION (arity-checked rename);
-    known columns cast to the recorded types (an INT literal inserts
-    into a BIGINT column); columns beyond the schema ride as-is
-    (add-column evolution, validated by the commit)."""
+def _insert_source(spark, root: str, src_sql: str) -> DataFrame:
+    """The source frame of an INSERT-family statement (INSERT INTO,
+    INSERT OVERWRITE, REPLACE WHERE), time-travel clauses resolved and
+    bound to the target table's recorded schema: VALUES rows bind by
+    POSITION (arity-checked rename); known columns cast to the recorded
+    types (an INT literal inserts into a BIGINT column); columns beyond
+    the schema ride as-is (add-column evolution, validated by the
+    commit)."""
     from s3_kinesis_replay_spark.operators import table_format as tf
 
+    df = spark.sql(resolve_time_travel(spark, src_sql))
     v = tf.latest_version(root)
     cols = tf._read_manifest(root, v).get("schema") if v else None
     if cols is None:
         return df
-    from pyspark.sql import functions as F
-
     names = [c for c, _t in cols]
     types = dict(cols)
     if src_sql.lstrip().upper().startswith("VALUES"):
@@ -625,8 +625,6 @@ def _parse_merge_on(text: str):
     refused loudly: the engine's row identity is name-based (tombstone
     files store the key columns by name), so ``t.a = s.b`` has no
     MOR representation here."""
-    import re
-
     t = text.strip()
     m = re.fullmatch(r"`?(\w+)`?", t)
     if m:
@@ -669,8 +667,6 @@ def _parse_merge_clauses(text: str) -> list[dict]:
     MATCHED``/``WHEN NOT MATCHED`` (clause boundary) or a top-level
     ``THEN`` (CASE expressions belong in SET values, where they parse
     fine)."""
-    import re
-
     segs = [
         s.strip()
         for s in re.split(
@@ -771,831 +767,651 @@ def _parse_merge_clauses(text: str) -> list[dict]:
     return clauses
 
 
-def resolve_dml(spark: SparkSession, query: str) -> DataFrame | None:
-    """SQL DML over REGISTERED snapshot tables (r13) — the write half of
-    the catalog surface, the same textual pre-pass trick as
-    :func:`resolve_time_travel` (Delta ships these as parser
-    extensions; a temp-view catalog has no hook, so the engine
-    recognizes the four statements itself):
+# Statement handlers: ``handler(spark, m, root)`` gets the statement's
+# match (group 1 is always the target name) and that name's registered
+# root — None when a creating statement names a new table. Plain
+# module-level functions that reach table_format through its module
+# attribute at call time, so tools/window_tool.py hashes each one and
+# the benchmark's table_format spans see every verb. Each imports
+# table_format itself: importing the package (every Python worker does)
+# must not load it.
 
-    * ``CREATE TABLE tbl LOCATION '<root>' AS <query>`` → genesis
-      commit + registration (refuses a non-empty root)
-    * ``DELETE FROM tbl WHERE <pred>``          → position MOR delete
-    * ``UPDATE tbl SET c = e, ... WHERE <pred>`` → atomic MOR update
-    * ``INSERT INTO tbl SELECT ...`` / ``VALUES ...`` → append commit
-    * ``MERGE INTO tbl USING (<query>) ON <key>`` → atomic upsert;
-      clause forms (r15): ``WHEN MATCHED [AND c] THEN UPDATE SET … /
-      DELETE``, ``WHEN NOT MATCHED [AND c] THEN INSERT * / (cols)
-      VALUES (…)``, ``WHEN NOT MATCHED BY SOURCE [AND c] THEN
-      DELETE / UPDATE SET`` — conditions are Spark SQL over aliases t/s, one
-      atomic commit per statement
-    * ``ALTER TABLE tbl ADD CONSTRAINT n CHECK (expr)`` /
-      ``DROP CONSTRAINT n`` → constraint metadata commits (r14)
-    * ``ALTER TABLE tbl ADD COLUMN c type`` → metadata-only schema
-      evolution (readers NULL-fill pre-evolution files; r14);
-      ``RENAME COLUMN a TO b`` / ``DROP COLUMN c`` (r15) → name-mapped
-      metadata-only evolution (old files project under the new name;
-      retired names refuse reuse until a compact)
-    * ``DESCRIBE HISTORY tbl`` → snapshot_history (r14)
-    * ``DESCRIBE DETAIL tbl`` → one-row table summary (Delta parity;
-      files/bytes/delete-state/spec/constraints; r14)
-    * ``SELECT * FROM TABLE_CHANGES(tbl, from, to)`` → row-level CDC
-      (snapshot_row_changes — Delta's table_changes TVF; r14); bounds
-      may be version numbers or ``TIMESTAMP '…'`` literals (r15 —
-      start resolves exclusive-before, end inclusive-at-or-before)
-    * ``SELECT * FROM TABLE_FILES(tbl [, version])`` → files metadata
-      table (Iceberg's tbl.files; r14)
-    * ``VACUUM tbl [RETAIN n VERSIONS]`` → age-graced retention (r14)
-    * ``OPTIMIZE tbl ZORDER BY (a, b)`` / ``CLUSTER BY (cols)`` →
-      clustered rewrite (r14)
 
-    Returns a one-row DataFrame (operation, target, version) and
-    RE-REGISTERS the view at the new snapshot so subsequent ``sql()``
-    reads see the committed state; returns None for anything else
-    (including these verbs on non-registered names — Spark then raises
-    its own error, rather than this layer guessing). Constraint
-    violations and commit conflicts propagate from the operators —
-    refused DML leaves the table untouched."""
-    import re
+def _result(spark, op: str, name: str, version: int) -> DataFrame:
+    return spark.createDataFrame(
+        [(op, name, version)], "operation string, target string, version int"
+    )
+
+
+def _done(spark, op: str, name: str, root: str, version: int) -> DataFrame:
+    """Finish a committing statement: bring every dependent on-commit
+    materialized view current (no-op, one isdir, for tables without
+    one; idempotent per source version), then re-register each
+    refreshed view's name and the target's own name — a temp view pins
+    the file list of the version it was created over."""
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    refreshed = tf.refresh_dependent_views(spark, root)
+    if refreshed:
+        canon = {os.path.abspath(r) for r in refreshed}
+        for nm, rt in list(_SNAPSHOT_ROOTS.items()):
+            if os.path.abspath(rt) in canon:
+                tf.snapshot_read(spark, rt).createOrReplaceTempView(nm)
+    tf.snapshot_read(spark, root).createOrReplaceTempView(name)
+    return _result(spark, op, name, version)
+
+
+def _refuse_shadow(spark, verb: str, name: str, what: str = "") -> None:
+    """createOrReplaceTempView would silently SHADOW an existing
+    non-snapshot view (e.g. the built-in `events` fixture) for every
+    later query in the session — refuse. Re-creating a name this module
+    registered is fine: its new LOCATION still refuses non-empty
+    targets."""
+    if name not in _SNAPSHOT_ROOTS and spark.catalog.tableExists(name):
+        raise ValueError(
+            f"{verb}: {name!r} already names a registered view{what} — "
+            "pick another name or drop the view first"
+        )
+
+
+def _create_as(spark, m, _root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    name, root, src_sql = m.group(1), m.group(2), m.group(3)
+    _refuse_shadow(
+        spark, "CREATE TABLE", name, " (a fixture table or other temp view)"
+    )
+    if tf.latest_version(root) > 0:
+        raise ValueError(
+            f"CREATE TABLE: {root} already holds snapshots "
+            f"(latest v{tf.latest_version(root)}) — INSERT INTO a "
+            "registered view, or point LOCATION at an empty dir"
+        )
+    df = spark.sql(resolve_time_travel(spark, src_sql))
+    v = tf.snapshot_write(spark, df, root, "overwrite")
+    register_snapshot_table(spark, name, root)
+    return _result(spark, "create", name, v)
+
+
+def _create_with_schema(spark, m, _root):
+    # empty v1 recording the schema; the first INSERT lands as v2
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    name, root = m.group(1), m.group(2)
+    _refuse_shadow(spark, "CREATE TABLE", name)
+    v = tf.snapshot_create_table(spark, root, m.group(3))
+    register_snapshot_table(spark, name, root)
+    return _result(spark, "create", name, v)
+
+
+def _convert(spark, m, _root):
+    # adopt a plain-parquet directory in place, zero bytes rewritten
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    name, root = m.group(1), m.group(2)
+    _refuse_shadow(spark, "CONVERT", name)
+    v = tf.snapshot_convert(spark, root)
+    register_snapshot_table(spark, name, root)
+    return _result(spark, "convert", name, v)
+
+
+def _shallow_clone(spark, m, _root):
+    # fork a registered table at a version/tag into an empty location,
+    # zero data copied (hard-linked files + verbatim metadata chain —
+    # history, time travel, CDC and tags up to the clone point all work)
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    name, root, src_name = m.group(1), m.group(2), m.group(3)
+    src_root = _SNAPSHOT_ROOTS.get(src_name)
+    if src_root is None:
+        raise ValueError(
+            f"SHALLOW CLONE: {src_name!r} is not a registered "
+            "snapshot table"
+        )
+    _refuse_shadow(spark, "SHALLOW CLONE", name)
+    at = int(m.group(4)) if m.group(4) else m.group(5)
+    v = tf.snapshot_clone(src_root, root, at)
+    register_snapshot_table(spark, name, root)
+    return _result(spark, "clone", name, v)
+
+
+def _delete(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    v = tf.snapshot_delete_where(spark, root, m.group(2))
+    return _done(spark, "delete", m.group(1), root, v)
+
+
+def _update(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    sets = _split_assignments(m.group(2))
+    v = tf.snapshot_update_where(spark, root, m.group(3), sets)
+    return _done(spark, "update", m.group(1), root, v)
+
+
+def _insert(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    df = _insert_source(spark, root, m.group(2))
+    # follow the table's recorded partition spec (after ALTER TABLE ...
+    # SET PARTITION SPEC, INSERTs lay out under the new spec)
+    v = tf.snapshot_write(spark, df, root, "append", partition_by="table")
+    return _done(spark, "insert", m.group(1), root, v)
+
+
+def _replace_where(spark, m, root):
+    # atomically replace exactly the predicate's slice with the source
+    # rows (every one of which must satisfy the predicate)
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    df = _insert_source(spark, root, m.group(3))
+    v = tf.snapshot_overwrite_where(spark, root, df, m.group(2))
+    return _done(spark, "replace_where", m.group(1), root, v)
+
+
+def _insert_overwrite(spark, m, root):
+    # the new version lists only the new files; history stays
+    # time-travelable until vacuum
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    df = _insert_source(spark, root, m.group(2))
+    v = tf.snapshot_write(spark, df, root, "overwrite", partition_by="table")
+    return _done(spark, "insert_overwrite", m.group(1), root, v)
+
+
+def _merge(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    key = _parse_merge_on(m.group(3))
+    clause_sql = (m.group(4) or "").strip()
+    src = spark.sql(resolve_time_travel(spark, m.group(2)))
+    if not clause_sql:
+        # bare key-upsert form: matched rows replaced by the source row,
+        # unmatched source rows inserted
+        v = tf.snapshot_merge(spark, root, src, key)
+    else:
+        v = tf.snapshot_merge_clauses(
+            spark, root, src, key, _parse_merge_clauses(clause_sql)
+        )
+    return _done(spark, "merge", m.group(1), root, v)
+
+
+def _add_constraint(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    v = tf.snapshot_set_constraint(
+        spark, root, m.group(2), m.group(3).strip()
+    )
+    return _done(spark, "add_constraint", m.group(1), root, v)
+
+
+def _drop_constraint(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    v = tf.snapshot_drop_constraint(root, m.group(2))
+    return _done(spark, "drop_constraint", m.group(1), root, v)
+
+
+def _add_column(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    v = tf.snapshot_add_column(
+        spark, root, m.group(2), m.group(3), default=m.group(4)
+    )
+    return _done(spark, "add_column", m.group(1), root, v)
+
+
+def _set_partition_spec(spark, m, root):
+    # metadata-only: old files keep their spec, new INSERTs follow the
+    # new one
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    specs = (
+        [s.strip() for s in _split_top_level(m.group(2))]
+        if m.group(2)
+        else None
+    )
+    v = tf.snapshot_evolve_partition_spec(spark, root, specs)
+    return _done(spark, "evolve_partition_spec", m.group(1), root, v)
+
+
+def _alter_column_type(spark, m, root):
+    # safe type WIDENING, metadata-only (old files cast up on read);
+    # unsafe changes refuse in snapshot_widen_column
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    v = tf.snapshot_widen_column(spark, root, m.group(2), m.group(3))
+    return _done(spark, "widen_column", m.group(1), root, v)
+
+
+def _rename_column(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    v = tf.snapshot_rename_column(spark, root, m.group(2), m.group(3))
+    return _done(spark, "rename_column", m.group(1), root, v)
+
+
+def _drop_column(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    v = tf.snapshot_drop_column(spark, root, m.group(2))
+    return _done(spark, "drop_column", m.group(1), root, v)
+
+
+def _create_matview(spark, m, _root):
+    # CREATE pins the definition and the reflected source version in the
+    # view's own manifest; REFRESH applies a signed CDC delta
+    # (O(changed rows) + O(groups))
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    name, vroot, on_commit, sel, src_name, gb = (
+        m.group(1), m.group(2), bool(m.group(3)),
+        m.group(4), m.group(5), m.group(6),
+    )
+    src_root = _SNAPSHOT_ROOTS.get(src_name)
+    if src_root is None:
+        raise ValueError(
+            f"CREATE MATERIALIZED VIEW: source {src_name!r} is not "
+            "a registered snapshot table — row-level CDC drives the "
+            "refresh, so the source must be a manifest table"
+        )
+    _refuse_shadow(
+        spark, "CREATE MATERIALIZED VIEW", name,
+        " (a fixture table or other temp view)",
+    )
+    group_cols = [g.strip().strip("`") for g in _split_top_level(gb)]
+    aggs: list[dict] = []
+    declared: list[str] = []
+    for item in _split_top_level(sel):
+        mm = re.fullmatch(r"(?is)COUNT\s*\(\s*\*\s*\)\s+AS\s+(\w+)", item)
+        if mm:
+            aggs.append({"fn": "count", "expr": None, "alias": mm.group(1)})
+            continue
+        mm = re.fullmatch(r"(?is)SUM\s*\((.+)\)\s+AS\s+(\w+)", item)
+        if mm:
+            aggs.append(
+                {
+                    "fn": "sum",
+                    "expr": mm.group(1).strip(),
+                    "alias": mm.group(2),
+                }
+            )
+            continue
+        mm = re.fullmatch(r"\s*`?(\w+)`?\s*", item)
+        if mm and mm.group(1) in group_cols:
+            declared.append(mm.group(1))
+            continue
+        raise ValueError(
+            f"materialized view select item {item.strip()!r} is not "
+            "a GROUP BY column, COUNT(*) AS n, or SUM(expr) AS s — "
+            "additive aggregates only (differential maintenance)"
+        )
+    if sorted(declared) != sorted(group_cols):
+        # every GROUP BY column must be selected (the stored view's
+        # columns are group_cols + aggs in that order; a select list
+        # omitting one would silently disagree with what is stored)
+        raise ValueError(
+            f"materialized view SELECT lists group columns "
+            f"{declared}, GROUP BY has {group_cols} — list every "
+            "group column in the select"
+        )
+    v = tf.matview_create(
+        spark, src_root, vroot, group_cols, aggs, refresh_on_commit=on_commit
+    )
+    register_snapshot_table(spark, name, vroot)
+    return _result(spark, "create_matview", name, v)
+
+
+def _refresh_matview(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    v = tf.matview_refresh(spark, root)
+    return _done(spark, "refresh_matview", m.group(1), root, v)
+
+
+def _drop_matview(spark, m, root):
+    # removes the stored view AND its on-commit pointer at the source,
+    # then unregisters the name
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    name = m.group(1)
+    tf.matview_drop(root)
+    _SNAPSHOT_ROOTS.pop(name, None)
+    with contextlib.suppress(Exception):
+        spark.catalog.dropTempView(name)
+    return _result(spark, "drop_matview", name, 0)
+
+
+def _restore(spark, m, root):
+    # metadata-only rollback; the undone commits stay time-travelable
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    at = int(m.group(2)) if m.group(2) else m.group(3)
+    v = tf.snapshot_restore(root, at)
+    return _done(spark, "restore", m.group(1), root, v)
+
+
+def _describe_history(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    return tf.snapshot_history(spark, root)
+
+
+def _describe_detail(spark, m, root):
+    import json
 
     from s3_kinesis_replay_spark.operators import table_format as tf
 
-    def done(op: str, name: str, root: str, version: int) -> DataFrame:
-        # REFRESH ON COMMIT (r16): after the verb lands, bring every
-        # dependent on-commit materialized view current. No-op (one
-        # isdir) for tables without registered views; idempotent per
-        # source version (the refresh records what it reflects). A
-        # refreshed view's REGISTERED NAME must re-register too — the
-        # temp view pins the file list of the version it was created
-        # over, exactly like the source name below.
-        import os as _os
-
-        refreshed = tf.refresh_dependent_views(spark, root)
-        if refreshed:
-            canon = {_os.path.abspath(r) for r in refreshed}
-            for nm, rt in list(_SNAPSHOT_ROOTS.items()):
-                if _os.path.abspath(rt) in canon:
-                    tf.snapshot_read(spark, rt).createOrReplaceTempView(nm)
-        tf.snapshot_read(spark, root).createOrReplaceTempView(name)
-        return spark.createDataFrame(
-            [(op, name, version)],
-            "operation string, target string, version int",
-        )
-
-    m = re.fullmatch(
-        r"\s*CREATE\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+(.+?)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
+    d = tf.snapshot_detail(root)
+    spec, cons = d["partition_spec"], d["constraints"]
+    d["partition_spec"] = json.dumps(spec) if spec else None
+    d["constraints"] = json.dumps(cons, sort_keys=True) if cons else None
+    return spark.createDataFrame(
+        [(m.group(1), *d.values())],
+        "name string, location string, version int, last_operation "
+        "string, num_files int, size_bytes bigint, num_delete_files "
+        "int, num_pos_delete_files int, partition_spec string, "
+        "constraints string, schema_width int",
     )
-    if m:
-        name, root, src_sql = m.group(1), m.group(2), m.group(3)
-        if name not in _SNAPSHOT_ROOTS and spark.catalog.tableExists(name):
-            # createOrReplaceTempView would silently SHADOW an existing
-            # non-snapshot view (e.g. the built-in `events` fixture) for
-            # every later query in the session (ADVICE r13) — refuse.
-            # Re-creating a name this module itself registered is fine:
-            # its previous root refused non-empty targets already.
-            raise ValueError(
-                f"CREATE TABLE: {name!r} already names a registered view "
-                "(a fixture table or other temp view) — pick another "
-                "name or drop the view first"
-            )
-        if tf.latest_version(root) > 0:
-            raise ValueError(
-                f"CREATE TABLE: {root} already holds snapshots "
-                f"(latest v{tf.latest_version(root)}) — INSERT INTO a "
-                "registered view, or point LOCATION at an empty dir"
-            )
-        df = spark.sql(resolve_time_travel(spark, src_sql))
-        v = tf.snapshot_write(spark, df, root, "overwrite")
-        register_snapshot_table(spark, name, root)
-        return spark.createDataFrame(
-            [("create", name, v)],
-            "operation string, target string, version int",
-        )
 
-    # CREATE TABLE with a declared schema (r16): empty v1 recording the
-    # schema; first INSERT lands as v2
-    m = re.fullmatch(
+
+def _table_files(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    v = int(m.group(2)) if m.group(2) else None
+    return tf.snapshot_files(spark, root, v)
+
+
+def _table_changes(spark, m, root):
+    # a starting TIMESTAMP resolves to the newest version strictly
+    # BEFORE it (exclusive lower bound, so commits at/after the
+    # timestamp are included); an ending TIMESTAMP to the newest version
+    # at/before it
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    lo = (
+        int(m.group(2))
+        if m.group(2)
+        else tf.cdc_start_version(root, tf.timestamp_to_epoch(m.group(3)))
+    )
+    hi = (
+        int(m.group(4))
+        if m.group(4)
+        else tf.version_as_of(root, tf.timestamp_to_epoch(m.group(5)))
+    )
+    return tf.snapshot_row_changes(spark, root, lo, hi)
+
+
+def _vacuum(spark, m, root):
+    # DRY RUN: identical walk and counts, nothing deleted
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    keep = int(m.group(2)) if m.group(2) else 2
+    rep = tf.snapshot_vacuum(root, keep_last=keep, dry_run=bool(m.group(3)))
+    return spark.createDataFrame(
+        [(
+            m.group(1),
+            rep["deleted_files"],
+            rep["kept_files"],
+            rep["skipped_young"],
+            len(rep["dropped_versions"]),
+        )],
+        "target string, deleted_files int, kept_files int, "
+        "skipped_young int, dropped_versions int",
+    )
+
+
+def _show_partitions(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    rows = [tuple(p.values()) for p in tf.snapshot_partitions(root)]
+    return spark.createDataFrame(
+        rows or [(None, 0, 0)],
+        "partition string, n_files int, n_bytes bigint",
+    )
+
+
+def _optimize_binpack(spark, m, root):
+    # minor compaction: rewrites only files below the threshold —
+    # O(small files), never O(table). WHERE scopes the pick to one
+    # partition: equality conjunctions on the partition transforms
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    name = m.group(1)
+    kw = {}
+    if m.group(2):
+        kw["small_bytes"] = int(m.group(2))
+    if m.group(3):
+        kw["min_files"] = int(m.group(3))
+    if m.group(4):
+        part: dict = {}
+        for clause in re.split(r"\s+AND\s+", m.group(4), flags=re.IGNORECASE):
+            pm = re.fullmatch(
+                r"\s*([\w(),. ]+?)\s*=\s*(?:'([^']*)'|(\S+))\s*", clause
+            )
+            if not pm:
+                raise ValueError(
+                    f"OPTIMIZE BINPACK WHERE: {clause.strip()!r} — "
+                    "only equality conjunctions on partition "
+                    "transforms are supported (files are picked "
+                    "by recorded partition value, not row scan)"
+                )
+            part[pm.group(1)] = (
+                pm.group(2) if pm.group(2) is not None else pm.group(3)
+            )
+        # keys must name recorded partition transforms: a typo'd or
+        # non-partition column would match zero entries and silently
+        # report success
+        spec = tf._read_manifest(root, tf.latest_version(root)).get(
+            "partition_spec"
+        ) or []
+        unknown = [k for k in part if k not in spec]
+        if unknown:
+            raise ValueError(
+                f"OPTIMIZE BINPACK WHERE: {unknown} are not "
+                f"partition transforms of {name!r} (recorded spec: "
+                f"{spec or 'none'}) — files are picked by recorded "
+                "partition value; a non-partition filter would "
+                "silently match nothing"
+            )
+        kw["partition"] = part
+    v = tf.snapshot_compact_small(spark, root, **kw)
+    return _done(
+        spark, "optimize_binpack", name, root,
+        v if v is not None else tf.latest_version(root),
+    )
+
+
+def _optimize_cluster(spark, m, root):
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    cols = [c.strip() for c in m.group(3).split(",")]
+    # the matched keyword decides the layout (a search for 'ZORDER'
+    # would false-positive on a table NAMED zorder_x)
+    zorder = m.group(2).upper() == "ZORDER"
+    v = tf.snapshot_cluster(spark, root, cols, zorder=zorder)
+    return _done(spark, "optimize", m.group(1), root, v)
+
+
+_I = re.IGNORECASE
+_ID = re.IGNORECASE | re.DOTALL
+
+# (pattern, handler, needs_registered_name) in first-match order; group
+# 1 of every pattern is the target name. resolve_dml returns None for a
+# needs_registered_name form on a name _SNAPSHOT_ROOTS does not hold.
+_STATEMENTS = [
+    (re.compile(
+        r"\s*CREATE\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+(.+?)"
+        r"\s*;?\s*", _ID), _create_as, False),
+    (re.compile(
         r"\s*CREATE\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'\s*"
-        r"\(\s*(.+?)\s*\)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        name, root, cols = m.group(1), m.group(2), m.group(3)
-        if name not in _SNAPSHOT_ROOTS and spark.catalog.tableExists(name):
-            raise ValueError(
-                f"CREATE TABLE: {name!r} already names a registered "
-                "view — pick another name or drop the view first"
-            )
-        v = tf.snapshot_create_table(spark, root, cols)
-        register_snapshot_table(spark, name, root)
-        return spark.createDataFrame(
-            [("create", name, v)],
-            "operation string, target string, version int",
-        )
-
-    # CONVERT (r16): adopt an existing plain-parquet directory in place
-    # (Delta's CONVERT TO DELTA) — zero bytes rewritten
-    m = re.fullmatch(
+        r"\(\s*(.+?)\s*\)\s*;?\s*", _ID), _create_with_schema, False),
+    (re.compile(
         r"\s*CONVERT\s+TO\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name, root = m.group(1), m.group(2)
-        if name not in _SNAPSHOT_ROOTS and spark.catalog.tableExists(name):
-            raise ValueError(
-                f"CONVERT: {name!r} already names a registered view — "
-                "pick another name or drop the view first"
-            )
-        v = tf.snapshot_convert(spark, root)
-        register_snapshot_table(spark, name, root)
-        return spark.createDataFrame(
-            [("convert", name, v)],
-            "operation string, target string, version int",
-        )
-
-    # SHALLOW CLONE (r16): fork a registered table at a version/tag
-    # into an empty location, zero data copied (hard-linked files +
-    # verbatim metadata chain — history, time travel, CDC, and tags up
-    # to the clone point all work on the clone)
-    m = re.fullmatch(
+        _I), _convert, False),
+    (re.compile(
         r"\s*CREATE\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'\s+SHALLOW\s+"
         r"CLONE\s+(\w+)(?:\s+VERSION\s+AS\s+OF\s+(?:(\d+)|'(\w+)'))?"
-        r"\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name, root, src_name = m.group(1), m.group(2), m.group(3)
-        src_root = _SNAPSHOT_ROOTS.get(src_name)
-        if src_root is None:
-            raise ValueError(
-                f"SHALLOW CLONE: {src_name!r} is not a registered "
-                "snapshot table"
-            )
-        if name not in _SNAPSHOT_ROOTS and spark.catalog.tableExists(name):
-            raise ValueError(
-                f"SHALLOW CLONE: {name!r} already names a registered "
-                "view — pick another name or drop the view first"
-            )
-        at = (
-            int(m.group(4))
-            if m.group(4)
-            else (m.group(5) if m.group(5) else None)
-        )
-        v = tf.snapshot_clone(src_root, root, at)
-        register_snapshot_table(spark, name, root)
-        return spark.createDataFrame(
-            [("clone", name, v)],
-            "operation string, target string, version int",
-        )
-
-    m = re.fullmatch(
-        r"\s*DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.+?)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        name, pred = m.group(1), m.group(2)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        return done("delete", name, root, tf.snapshot_delete_where(spark, root, pred))
-
-    m = re.fullmatch(
-        r"\s*UPDATE\s+(\w+)\s+SET\s+(.+?)\s+WHERE\s+(.+?)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        name, sets, pred = m.group(1), m.group(2), m.group(3)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        v = tf.snapshot_update_where(
-            spark, root, pred, _split_assignments(sets)
-        )
-        return done("update", name, root, v)
-
-    m = re.fullmatch(
-        r"\s*INSERT\s+INTO\s+(\w+)\s+((?:SELECT|VALUES|WITH|TABLE)\b.+?)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        name, src_sql = m.group(1), m.group(2)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        df = _bind_insert_df(
-            spark, root, src_sql,
-            spark.sql(resolve_time_travel(spark, src_sql)),
-        )
-        return done(
-            "insert", name, root,
-            # follow the table's recorded partition spec (r16 — after
-            # ALTER TABLE ... SET PARTITION SPEC, INSERTs lay out under
-            # the new spec; unpartitioned tables are unchanged)
-            tf.snapshot_write(
-                spark, df, root, "append", partition_by="table"
-            ),
-        )
-
-    # REPLACE WHERE (r16): Delta's replaceWhere as SQL — atomically
-    # replace exactly the predicate's slice with the source rows (every
-    # one of which must satisfy the predicate; refused otherwise)
-    m = re.fullmatch(
+        r"\s*;?\s*", _I), _shallow_clone, False),
+    (re.compile(
+        r"\s*DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.+?)\s*;?\s*", _ID),
+     _delete, True),
+    (re.compile(
+        r"\s*UPDATE\s+(\w+)\s+SET\s+(.+?)\s+WHERE\s+(.+?)\s*;?\s*", _ID),
+     _update, True),
+    (re.compile(
+        r"\s*INSERT\s+INTO\s+(\w+)\s+((?:SELECT|VALUES|WITH|TABLE)\b.+?)"
+        r"\s*;?\s*", _ID), _insert, True),
+    (re.compile(
         r"\s*INSERT\s+INTO\s+(\w+)\s+REPLACE\s+WHERE\s+(.+?)\s+"
-        r"((?:SELECT|VALUES|WITH|TABLE)\b.+?)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        name, pred, src_sql = m.group(1), m.group(2), m.group(3)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        df = _bind_insert_df(
-            spark, root, src_sql,
-            spark.sql(resolve_time_travel(spark, src_sql)),
-        )
-        return done(
-            "replace_where", name, root,
-            tf.snapshot_overwrite_where(spark, root, df, pred),
-        )
-
-    # INSERT OVERWRITE (r16): full-table overwrite through the catalog
-    # (new version lists only the new files; history stays time-
-    # travelable until vacuum), laid out under the recorded spec
-    m = re.fullmatch(
+        r"((?:SELECT|VALUES|WITH|TABLE)\b.+?)\s*;?\s*", _ID),
+     _replace_where, True),
+    (re.compile(
         r"\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?(\w+)\s+"
-        r"((?:SELECT|VALUES|WITH|TABLE)\b.+?)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        name, src_sql = m.group(1), m.group(2)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        df = _bind_insert_df(
-            spark, root, src_sql,
-            spark.sql(resolve_time_travel(spark, src_sql)),
-        )
-        return done(
-            "insert_overwrite", name, root,
-            tf.snapshot_write(
-                spark, df, root, "overwrite", partition_by="table"
-            ),
-        )
-
-    m = re.fullmatch(
+        r"((?:SELECT|VALUES|WITH|TABLE)\b.+?)\s*;?\s*", _ID),
+     _insert_overwrite, True),
+    (re.compile(
         r"\s*MERGE\s+INTO\s+(\w+)\s+USING\s+\((.+)\)\s+ON\s+(.+?)"
-        r"((?:\s+WHEN\s+(?:NOT\s+)?MATCHED\b.+)?)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        name, src_sql = m.group(1), m.group(2)
-        key = _parse_merge_on(m.group(3))
-        clause_sql = (m.group(4) or "").strip()
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        src = spark.sql(resolve_time_travel(spark, src_sql))
-        if not clause_sql:
-            # bare key-upsert form (r13): matched rows replaced by the
-            # source row, unmatched source rows inserted
-            return done(
-                "merge", name, root, tf.snapshot_merge(spark, root, src, key)
-            )
-        # clause forms (r15, VERDICT r14 item 3): WHEN MATCHED [AND c]
-        # THEN UPDATE SET/DELETE, WHEN NOT MATCHED [AND c] THEN INSERT,
-        # WHEN NOT MATCHED BY SOURCE THEN DELETE — one atomic commit
-        return done(
-            "merge",
-            name,
-            root,
-            tf.snapshot_merge_clauses(
-                spark, root, src, key, _parse_merge_clauses(clause_sql)
-            ),
-        )
-
-    # DDL verbs (r14, VERDICT item 4): constraint and column management
-    # from SQL, one atomic metadata commit per statement, view
-    # re-registered like every other verb here
-    m = re.fullmatch(
+        r"((?:\s+WHEN\s+(?:NOT\s+)?MATCHED\b.+)?)\s*;?\s*", _ID),
+     _merge, True),
+    (re.compile(
         r"\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+CONSTRAINT\s+(\w+)\s+"
-        r"CHECK\s*\((.+)\)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        name, cname, expr = m.group(1), m.group(2), m.group(3).strip()
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        v = tf.snapshot_set_constraint(spark, root, cname, expr)
-        return done("add_constraint", name, root, v)
-
-    m = re.fullmatch(
+        r"CHECK\s*\((.+)\)\s*;?\s*", _ID), _add_constraint, True),
+    (re.compile(
         r"\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+CONSTRAINT\s+(\w+)\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name, cname = m.group(1), m.group(2)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        return done(
-            "drop_constraint", name, root,
-            tf.snapshot_drop_constraint(root, cname),
-        )
-
-    # Two alternatives, NOT one pattern with optional parens: a lazy type
-    # group followed by an optional `\)?` strips the closing paren of
-    # parenthesized types ('decimal(10,2)' → 'decimal(10,2'), breaking
-    # DataType.fromDDL. Bare form takes the type verbatim; the COLUMNS(…)
-    # form requires a matched closing paren.
-    m = re.fullmatch(
+        _I), _drop_constraint, True),
+    # ADD COLUMN takes two patterns, NOT one with optional parens: a lazy
+    # type group followed by an optional `\)?` strips the closing paren
+    # of parenthesized types ('decimal(10,2)' → 'decimal(10,2'), breaking
+    # DataType.fromDDL. The bare form takes the type verbatim; the
+    # COLUMNS(…) form requires a matched closing paren.
+    (re.compile(
         r"\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMNS?\s+"
         r"(\w+)\s+([A-Za-z_][A-Za-z0-9_,()<> ]*?)"
-        r"(?:\s+DEFAULT\s+(.+?))?\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    ) or re.fullmatch(
+        r"(?:\s+DEFAULT\s+(.+?))?\s*;?\s*", _I), _add_column, True),
+    (re.compile(
         r"\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMNS?\s*\(\s*"
         r"(\w+)\s+([A-Za-z_][A-Za-z0-9_,()<> ]*?)"
-        r"(?:\s+DEFAULT\s+(.+?))?\s*\)\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name, col, dtype = m.group(1), m.group(2), m.group(3)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        return done(
-            "add_column", name, root,
-            tf.snapshot_add_column(
-                spark, root, col, dtype, default=m.group(4)
-            ),
-        )
-
-    m = re.fullmatch(
+        r"(?:\s+DEFAULT\s+(.+?))?\s*\)\s*;?\s*", _I), _add_column, True),
+    (re.compile(
         r"\s*ALTER\s+TABLE\s+(\w+)\s+SET\s+PARTITION\s+SPEC\s+"
-        r"(?:NONE|\(\s*(.+?)\s*\))\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        # Iceberg-style partition spec evolution (r16): metadata-only;
-        # old files keep their spec, new INSERTs follow the new one
-        name = m.group(1)
-        specs = (
-            [s.strip() for s in _split_top_level(m.group(2))]
-            if m.group(2)
-            else None
-        )
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        return done(
-            "evolve_partition_spec", name, root,
-            tf.snapshot_evolve_partition_spec(spark, root, specs),
-        )
-
-    m = re.fullmatch(
+        r"(?:NONE|\(\s*(.+?)\s*\))\s*;?\s*", _I), _set_partition_spec, True),
+    (re.compile(
         r"\s*ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+"
         r"(?:TYPE|SET\s+DATA\s+TYPE)\s+"
-        r"([A-Za-z_][A-Za-z0-9_,()<> ]*?)\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        # safe type WIDENING (r16): metadata-only, old files cast up
-        # on read; unsafe changes refuse in snapshot_widen_column
-        name, col, dtype = m.group(1), m.group(2), m.group(3)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        return done(
-            "widen_column", name, root,
-            tf.snapshot_widen_column(spark, root, col, dtype),
-        )
-
-    m = re.fullmatch(
+        r"([A-Za-z_][A-Za-z0-9_,()<> ]*?)\s*;?\s*", _I),
+     _alter_column_type, True),
+    (re.compile(
         r"\s*ALTER\s+TABLE\s+(\w+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+"
-        r"(\w+)\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name, old, new = m.group(1), m.group(2), m.group(3)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        return done(
-            "rename_column", name, root,
-            tf.snapshot_rename_column(spark, root, old, new),
-        )
-
-    m = re.fullmatch(
-        r"\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMN\s+(\w+)\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name, col = m.group(1), m.group(2)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        return done(
-            "drop_column", name, root,
-            tf.snapshot_drop_column(spark, root, col),
-        )
-
-    # Materialized views (r15, VERDICT r14 item 8 — the p23/p24
-    # differential-maintenance proof as a user verb): CREATE pins the
-    # definition + reflected source version in the view's own manifest;
-    # REFRESH applies a signed CDC delta (O(changed rows) + O(groups))
-    m = re.fullmatch(
+        r"(\w+)\s*;?\s*", _I), _rename_column, True),
+    (re.compile(
+        r"\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMN\s+(\w+)\s*;?\s*", _I),
+     _drop_column, True),
+    (re.compile(
         r"\s*CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+LOCATION\s+"
         r"'([^']+)'\s+(?:(REFRESH\s+ON\s+COMMIT)\s+)?"
         r"AS\s+SELECT\s+(.+?)\s+FROM\s+(\w+)\s+"
-        r"GROUP\s+BY\s+(.+?)\s*;?\s*",
-        query,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if m:
-        name, vroot, on_commit, sel, src_name, gb = (
-            m.group(1), m.group(2), bool(m.group(3)),
-            m.group(4), m.group(5), m.group(6),
-        )
-        src_root = _SNAPSHOT_ROOTS.get(src_name)
-        if src_root is None:
-            raise ValueError(
-                f"CREATE MATERIALIZED VIEW: source {src_name!r} is not "
-                "a registered snapshot table — row-level CDC drives the "
-                "refresh, so the source must be a manifest table"
-            )
-        if name not in _SNAPSHOT_ROOTS and spark.catalog.tableExists(name):
-            # same rule as CTAS: refuse shadowing a foreign view, but
-            # re-creating a name THIS module registered is fine (its
-            # new LOCATION still refuses non-empty targets)
-            raise ValueError(
-                f"CREATE MATERIALIZED VIEW: {name!r} already names a "
-                "registered view (a fixture table or other temp view) — "
-                "pick another name or drop the view first"
-            )
-        group_cols = [g.strip().strip("`") for g in _split_top_level(gb)]
-        aggs: list[dict] = []
-        declared: list[str] = []
-        for item in _split_top_level(sel):
-            mm = re.fullmatch(
-                r"(?is)COUNT\s*\(\s*\*\s*\)\s+AS\s+(\w+)", item
-            )
-            if mm:
-                aggs.append(
-                    {"fn": "count", "expr": None, "alias": mm.group(1)}
-                )
-                continue
-            mm = re.fullmatch(r"(?is)SUM\s*\((.+)\)\s+AS\s+(\w+)", item)
-            if mm:
-                aggs.append(
-                    {
-                        "fn": "sum",
-                        "expr": mm.group(1).strip(),
-                        "alias": mm.group(2),
-                    }
-                )
-                continue
-            mm = re.fullmatch(r"\s*`?(\w+)`?\s*", item)
-            if mm and mm.group(1) in group_cols:
-                declared.append(mm.group(1))
-                continue
-            raise ValueError(
-                f"materialized view select item {item.strip()!r} is not "
-                "a GROUP BY column, COUNT(*) AS n, or SUM(expr) AS s — "
-                "additive aggregates only (differential maintenance)"
-            )
-        if sorted(declared) != sorted(group_cols):
-            # every GROUP BY column must be selected (the stored view's
-            # columns are group_cols + aggs in that order; a select list
-            # omitting one would silently disagree with what is stored)
-            raise ValueError(
-                f"materialized view SELECT lists group columns "
-                f"{declared}, GROUP BY has {group_cols} — list every "
-                "group column in the select"
-            )
-        v = tf.matview_create(
-            spark, src_root, vroot, group_cols, aggs,
-            refresh_on_commit=on_commit,
-        )
-        register_snapshot_table(spark, name, vroot)
-        return spark.createDataFrame(
-            [("create_matview", name, v)],
-            "operation string, target string, version int",
-        )
-
-    m = re.fullmatch(
-        r"\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(\w+)\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name = m.group(1)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        return done(
-            "refresh_matview", name, root, tf.matview_refresh(spark, root)
-        )
-
-    m = re.fullmatch(
-        r"\s*DROP\s+MATERIALIZED\s+VIEW\s+(\w+)\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        # r16: removes the stored view AND its on-commit pointer at
-        # the source, then unregisters the name
-        name = m.group(1)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        tf.matview_drop(root)
-        _SNAPSHOT_ROOTS.pop(name, None)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        return spark.createDataFrame(
-            [("drop_matview", name, 0)],
-            "operation string, target string, version int",
-        )
-
-    # RESTORE (r16): Delta's `RESTORE TABLE t TO VERSION AS OF v` —
-    # metadata-only rollback; the undone commits stay time-travelable
-    m = re.fullmatch(
+        r"GROUP\s+BY\s+(.+?)\s*;?\s*", _ID), _create_matview, False),
+    (re.compile(r"\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(\w+)\s*;?\s*", _I),
+     _refresh_matview, True),
+    (re.compile(r"\s*DROP\s+MATERIALIZED\s+VIEW\s+(\w+)\s*;?\s*", _I),
+     _drop_matview, True),
+    (re.compile(
         r"\s*RESTORE\s+TABLE\s+(\w+)\s+TO\s+VERSION\s+AS\s+OF\s+"
-        r"(?:(\d+)|'(\w+)')\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name = m.group(1)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        at = int(m.group(2)) if m.group(2) else m.group(3)
-        return done("restore", name, root, tf.snapshot_restore(root, at))
-
-    # Maintenance/introspection verbs (r14 — Delta ships DESCRIBE
-    # HISTORY / VACUUM / OPTIMIZE as SQL; same textual pre-pass). These
-    # return their own result shapes, not the (op, target, version) row.
-    m = re.fullmatch(
-        r"\s*DESCRIBE\s+HISTORY\s+(\w+)\s*;?\s*", query, re.IGNORECASE
-    )
-    if m:
-        root = _SNAPSHOT_ROOTS.get(m.group(1))
-        if root is None:
-            return None
-        return tf.snapshot_history(spark, root)
-
-    m = re.fullmatch(
-        r"\s*DESCRIBE\s+DETAIL\s+(\w+)\s*;?\s*", query, re.IGNORECASE
-    )
-    if m:
-        name = m.group(1)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        import json as _json
-
-        v = tf.latest_version(root)
-        mfst = tf._read_manifest(root, v)
-        ents = tf._entries(mfst, root)
-        return spark.createDataFrame(
-            [(
-                name,
-                root,
-                v,
-                mfst["operation"],
-                len(ents),
-                sum(e.get("bytes") or 0 for e in ents),
-                len(tf._delete_entries(mfst, root)),
-                len(tf._pos_delete_entries(mfst, root)),
-                _json.dumps(mfst.get("partition_spec"))
-                if mfst.get("partition_spec")
-                else None,
-                _json.dumps(mfst.get("constraints"), sort_keys=True)
-                if mfst.get("constraints")
-                else None,
-                len(mfst.get("schema") or []),
-            )],
-            "name string, location string, version int, last_operation "
-            "string, num_files int, size_bytes bigint, num_delete_files "
-            "int, num_pos_delete_files int, partition_spec string, "
-            "constraints string, schema_width int",
-        )
-
-    m = re.fullmatch(
+        r"(?:(\d+)|'(\w+)')\s*;?\s*", _I), _restore, True),
+    (re.compile(r"\s*DESCRIBE\s+HISTORY\s+(\w+)\s*;?\s*", _I),
+     _describe_history, True),
+    (re.compile(r"\s*DESCRIBE\s+DETAIL\s+(\w+)\s*;?\s*", _I),
+     _describe_detail, True),
+    (re.compile(
         r"\s*SELECT\s+\*\s+FROM\s+TABLE_FILES\s*\(\s*(\w+)"
-        r"(?:\s*,\s*(\d+))?\s*\)\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        root = _SNAPSHOT_ROOTS.get(m.group(1))
-        if root is None:
-            return None
-        v = int(m.group(2)) if m.group(2) else None
-        return tf.snapshot_files(spark, root, v)
-
-    m = re.fullmatch(
+        r"(?:\s*,\s*(\d+))?\s*\)\s*;?\s*", _I), _table_files, True),
+    (re.compile(
         r"\s*SELECT\s+\*\s+FROM\s+TABLE_CHANGES\s*\(\s*(\w+)\s*,\s*"
         r"(?:(\d+)|TIMESTAMP\s*('[^']*'))\s*,\s*"
-        r"(?:(\d+)|TIMESTAMP\s*('[^']*'))\s*\)\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name = m.group(1)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        # timestamp bounds (r15 — Delta's more common spelling):
-        # starting TIMESTAMP resolves to the newest version strictly
-        # BEFORE it (exclusive lower bound, so commits at/after the
-        # timestamp are included); ending TIMESTAMP to the newest
-        # version at/before it — composing the TIMESTAMP AS OF walk
-        lo = (
-            int(m.group(2))
-            if m.group(2)
-            else tf.cdc_start_version(
-                root, tf.timestamp_to_epoch(m.group(3))
-            )
-        )
-        hi = (
-            int(m.group(4))
-            if m.group(4)
-            else tf.version_as_of(root, tf.timestamp_to_epoch(m.group(5)))
-        )
-        return tf.snapshot_row_changes(spark, root, lo, hi)
-
-    m = re.fullmatch(
+        r"(?:(\d+)|TIMESTAMP\s*('[^']*'))\s*\)\s*;?\s*", _I),
+     _table_changes, True),
+    (re.compile(
         r"\s*VACUUM\s+(\w+)(?:\s+RETAIN\s+(\d+)\s+VERSIONS)?"
-        r"(\s+DRY\s+RUN)?\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name = m.group(1)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        keep = int(m.group(2)) if m.group(2) else 2
-        # DRY RUN (r16, Delta parity): identical walk and counts,
-        # nothing deleted — the preview before releasing retention
-        rep = tf.snapshot_vacuum(
-            root, keep_last=keep, dry_run=bool(m.group(3))
-        )
-        return spark.createDataFrame(
-            [(
-                name,
-                rep["deleted_files"],
-                rep["kept_files"],
-                rep["skipped_young"],
-                len(rep["dropped_versions"]),
-            )],
-            "target string, deleted_files int, kept_files int, "
-            "skipped_young int, dropped_versions int",
-        )
-
-    # SHOW PARTITIONS (r16): recorded partition values of the live
-    # snapshot with file/byte counts — pure manifest metadata, zero
-    # data I/O (entries without partition descriptors group under
-    # NULL, so mixed lineages stay visible)
-    m = re.fullmatch(
-        r"\s*SHOW\s+PARTITIONS\s+(\w+)\s*;?\s*", query, re.IGNORECASE
-    )
-    if m:
-        name = m.group(1)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        v = tf.latest_version(root)
-        mfst = tf._read_manifest(root, v)
-        agg: dict = {}
-        for e in tf._entries(mfst, root):
-            pv = e.get("partition")
-            key = (
-                ", ".join(f"{k}={pv[k]}" for k in sorted(pv))
-                if pv
-                else None
-            )
-            n, b = agg.get(key, (0, 0))
-            agg[key] = (n + 1, b + (e.get("bytes") or 0))
-        rows = [
-            (k, n, b)
-            for k, (n, b) in sorted(
-                agg.items(), key=lambda kv: (kv[0] is None, kv[0])
-            )
-        ]
-        return spark.createDataFrame(
-            rows or [(None, 0, 0)],
-            "partition string, n_files int, n_bytes bigint",
-        )
-
-    m = re.fullmatch(
+        r"(\s+DRY\s+RUN)?\s*;?\s*", _I), _vacuum, True),
+    (re.compile(r"\s*SHOW\s+PARTITIONS\s+(\w+)\s*;?\s*", _I),
+     _show_partitions, True),
+    (re.compile(
         r"\s*OPTIMIZE\s+(\w+)\s+BINPACK"
         r"(?:\s+\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\))?"
-        r"(?:\s+WHERE\s+(.+?))?\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        # minor bin-packing compaction (r16): rewrites only files
-        # below the threshold — O(small files), never O(table);
-        # optional (small_bytes[, min_files]) operands. WHERE scopes
-        # the pick to one partition: equality conjunctions on the
-        # table's partition transforms ('bin-pack yesterday's
-        # partition, not the table')
-        name = m.group(1)
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        kw = {}
-        if m.group(2):
-            kw["small_bytes"] = int(m.group(2))
-        if m.group(3):
-            kw["min_files"] = int(m.group(3))
-        if m.group(4):
-            part: dict = {}
-            for clause in re.split(
-                r"\s+AND\s+", m.group(4), flags=re.IGNORECASE
-            ):
-                pm = re.fullmatch(
-                    r"\s*([\w(),. ]+?)\s*=\s*(?:'([^']*)'|(\S+))\s*",
-                    clause,
-                )
-                if not pm:
-                    raise ValueError(
-                        f"OPTIMIZE BINPACK WHERE: {clause.strip()!r} — "
-                        "only equality conjunctions on partition "
-                        "transforms are supported (files are picked "
-                        "by recorded partition value, not row scan)"
-                    )
-                part[pm.group(1)] = (
-                    pm.group(2) if pm.group(2) is not None else pm.group(3)
-                )
-            # keys must name recorded partition transforms (r16
-            # review): a typo'd or non-partition column would match
-            # zero entries and silently report success
-            spec = tf._read_manifest(root, tf.latest_version(root)).get(
-                "partition_spec"
-            ) or []
-            unknown = [k for k in part if k not in spec]
-            if unknown:
-                raise ValueError(
-                    f"OPTIMIZE BINPACK WHERE: {unknown} are not "
-                    f"partition transforms of {name!r} (recorded spec: "
-                    f"{spec or 'none'}) — files are picked by recorded "
-                    "partition value; a non-partition filter would "
-                    "silently match nothing"
-                )
-            kw["partition"] = part
-        v = tf.snapshot_compact_small(spark, root, **kw)
-        return done(
-            "optimize_binpack", name, root,
-            v if v is not None else tf.latest_version(root),
-        )
-
-    m = re.fullmatch(
+        r"(?:\s+WHERE\s+(.+?))?\s*;?\s*", _I), _optimize_binpack, True),
+    (re.compile(
         r"\s*OPTIMIZE\s+(\w+)\s+(ZORDER|CLUSTER)\s+BY\s*"
-        r"\(?\s*(\w+(?:\s*,\s*\w+)*)\s*\)?\s*;?\s*",
-        query,
-        re.IGNORECASE,
-    )
-    if m:
-        name, verb, cols = (
-            m.group(1),
-            m.group(2).upper(),
-            [c.strip() for c in m.group(3).split(",")],
-        )
-        root = _SNAPSHOT_ROOTS.get(name)
-        if root is None:
-            return None
-        # the matched keyword decides the layout (a bare re.search for
-        # 'ZORDER' would false-positive on a table NAMED zorder_x, r14)
-        v = tf.snapshot_cluster(spark, root, cols, zorder=verb == "ZORDER")
-        return done("optimize", name, root, v)
+        r"\(?\s*(\w+(?:\s*,\s*\w+)*)\s*\)?\s*;?\s*", _I),
+     _optimize_cluster, True),
+]
 
+
+def resolve_dml(spark: SparkSession, query: str) -> DataFrame | None:
+    """SQL DML/DDL over REGISTERED snapshot tables — the write half of
+    the catalog surface, the same textual pre-pass as
+    :func:`resolve_time_travel` (Delta ships these as parser
+    extensions; a temp-view catalog has no hook). Statement forms, in
+    first-match order (``_STATEMENTS``):
+
+    * ``CREATE TABLE t LOCATION '<root>' AS <query>`` (refuses a
+      non-empty root)
+    * ``CREATE TABLE t LOCATION '<root>' (col type, ...)``
+    * ``CONVERT TO TABLE t LOCATION '<root>'``
+    * ``CREATE TABLE t LOCATION '<root>' SHALLOW CLONE s
+      [VERSION AS OF n | 'tag']``
+    * ``DELETE FROM t WHERE <pred>``
+    * ``UPDATE t SET c = e, ... WHERE <pred>``
+    * ``INSERT INTO t <query>`` (SELECT / VALUES / WITH / TABLE)
+    * ``INSERT INTO t REPLACE WHERE <pred> <query>``
+    * ``INSERT OVERWRITE [TABLE] t <query>``
+    * ``MERGE INTO t USING (<query>) ON <key> [WHEN ...]``: ON is a bare
+      key column or an AND of ``t.c = s.c``; clauses ``WHEN MATCHED
+      [AND c] THEN UPDATE SET ... / DELETE``, ``WHEN NOT MATCHED [AND c]
+      THEN INSERT * / (cols) VALUES (...)``, ``WHEN NOT MATCHED BY
+      SOURCE [AND c] THEN DELETE / UPDATE SET ...`` (conditions are
+      Spark SQL over aliases t/s)
+    * ``ALTER TABLE t ADD CONSTRAINT n CHECK (expr)``
+    * ``ALTER TABLE t DROP CONSTRAINT n``
+    * ``ALTER TABLE t ADD COLUMN[S] c type [DEFAULT e]``
+    * ``ALTER TABLE t ADD COLUMN[S] (c type [DEFAULT e])``
+    * ``ALTER TABLE t SET PARTITION SPEC (transforms) | NONE``
+    * ``ALTER TABLE t ALTER COLUMN c TYPE | SET DATA TYPE type``
+    * ``ALTER TABLE t RENAME COLUMN a TO b``
+    * ``ALTER TABLE t DROP COLUMN c``
+    * ``CREATE MATERIALIZED VIEW v LOCATION '<root>' [REFRESH ON
+      COMMIT] AS SELECT g, COUNT(*) AS n, SUM(e) AS s FROM t GROUP BY g``
+    * ``REFRESH MATERIALIZED VIEW v``
+    * ``DROP MATERIALIZED VIEW v``
+    * ``RESTORE TABLE t TO VERSION AS OF n | 'tag'``
+    * ``DESCRIBE HISTORY t``
+    * ``DESCRIBE DETAIL t``
+    * ``SELECT * FROM TABLE_FILES(t [, version])``
+    * ``SELECT * FROM TABLE_CHANGES(t, from, to)`` (bounds are versions
+      or ``TIMESTAMP '...'``)
+    * ``VACUUM t [RETAIN n VERSIONS] [DRY RUN]``
+    * ``SHOW PARTITIONS t``
+    * ``OPTIMIZE t BINPACK [(small_bytes [, min_files])]
+      [WHERE transform = value AND ...]``
+    * ``OPTIMIZE t ZORDER BY (cols)`` / ``OPTIMIZE t CLUSTER BY (cols)``
+
+    A committing statement returns a one-row DataFrame (operation,
+    target, version) and RE-REGISTERS the view at the new snapshot so
+    subsequent ``sql()`` reads see the committed state; DESCRIBE,
+    TABLE_FILES, TABLE_CHANGES, VACUUM and SHOW PARTITIONS return their
+    own frames. Returns None for anything else, including these verbs
+    on non-registered names — Spark then raises its own error, rather
+    than this layer guessing. Constraint violations and commit
+    conflicts propagate from the operators — refused DML leaves the
+    table untouched."""
+    for pattern, handler, needs_registered_name in _STATEMENTS:
+        m = pattern.fullmatch(query)
+        if m:
+            root = _SNAPSHOT_ROOTS.get(m.group(1))
+            if needs_registered_name and root is None:
+                return None
+            return handler(spark, m, root)
     return None
 
 

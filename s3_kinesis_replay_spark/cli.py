@@ -397,23 +397,7 @@ def run_table_cmd(args: argparse.Namespace) -> int:
     from s3_kinesis_replay_spark.session import get_spark
 
     if args.verb == "detail":  # metadata only, no session
-        m = tf._read_manifest(args.root, tf.latest_version(args.root))
-        ents = tf._entries(m, args.root)
-        print(json.dumps({
-            "verb": "detail",
-            "location": args.root,
-            "version": m["version"],
-            "last_operation": m["operation"],
-            "num_files": len(ents),
-            "size_bytes": sum(e.get("bytes") or 0 for e in ents),
-            "num_delete_files": len(tf._delete_entries(m, args.root)),
-            "num_pos_delete_files": len(
-                tf._pos_delete_entries(m, args.root)
-            ),
-            "partition_spec": m.get("partition_spec"),
-            "constraints": m.get("constraints") or {},
-            "schema_width": len(m.get("schema") or []),
-        }))
+        print(json.dumps({"verb": "detail", **tf.snapshot_detail(args.root)}))
         return 0
     if args.verb == "vacuum":  # metadata + filesystem only, no session
         kwargs = {"keep_last": args.keep_last, "dry_run": args.dry_run}
@@ -433,25 +417,9 @@ def run_table_cmd(args: argparse.Namespace) -> int:
         print(json.dumps({"verb": "clone", "dest": args.dest, "version": v}))
         return 0
     if args.verb == "partitions":  # pure metadata, no session
-        m = tf._read_manifest(args.root, tf.latest_version(args.root))
-        agg = {}
-        for e in tf._entries(m, args.root):
-            pv = e.get("partition")
-            key = (
-                ", ".join(f"{k}={pv[k]}" for k in sorted(pv))
-                if pv
-                else None
-            )
-            n, b = agg.get(key, (0, 0))
-            agg[key] = (n + 1, b + (e.get("bytes") or 0))
         print(json.dumps({
             "verb": "partitions",
-            "partitions": [
-                {"partition": k, "n_files": n, "n_bytes": b}
-                for k, (n, b) in sorted(
-                    agg.items(), key=lambda kv: (kv[0] is None, kv[0])
-                )
-            ],
+            "partitions": tf.snapshot_partitions(args.root),
         }))
         return 0
     if args.verb == "fold":

@@ -4583,6 +4583,49 @@ def snapshot_files(
     )
 
 
+def snapshot_detail(root: str) -> dict:
+    """DESCRIBE DETAIL / ``table detail``: a summary of the live snapshot
+    — version, last operation, live file and byte counts, equality- and
+    position-delete file counts, partition spec, constraints, schema
+    width. Pure manifest metadata, no data file is opened."""
+    v = latest_version(root)
+    m = _read_manifest(root, v)
+    ents = _entries(m, root)
+    return {
+        "location": root,
+        "version": v,
+        "last_operation": m["operation"],
+        "num_files": len(ents),
+        "size_bytes": sum(e.get("bytes") or 0 for e in ents),
+        "num_delete_files": len(_delete_entries(m, root)),
+        "num_pos_delete_files": len(_pos_delete_entries(m, root)),
+        "partition_spec": m.get("partition_spec"),
+        "constraints": m.get("constraints") or {},
+        "schema_width": len(m.get("schema") or []),
+    }
+
+
+def snapshot_partitions(root: str) -> list[dict]:
+    """SHOW PARTITIONS / ``table partitions``: the live snapshot's
+    recorded partition values (``k=v, ...``, keys sorted) with file and
+    byte counts, in value order. Entries without a partition descriptor
+    group under None, listed last, so mixed lineages stay visible. Pure
+    manifest metadata, no data file is opened."""
+    m = _read_manifest(root, latest_version(root))
+    agg: dict = {}
+    for e in _entries(m, root):
+        pv = e.get("partition")
+        key = ", ".join(f"{k}={pv[k]}" for k in sorted(pv)) if pv else None
+        n, b = agg.get(key, (0, 0))
+        agg[key] = (n + 1, b + (e.get("bytes") or 0))
+    return [
+        {"partition": k, "n_files": n, "n_bytes": b}
+        for k, (n, b) in sorted(
+            agg.items(), key=lambda kv: (kv[0] is None, kv[0])
+        )
+    ]
+
+
 def snapshot_history(spark: SparkSession, root: str) -> DataFrame:
     """DESCRIBE HISTORY: one row per retained snapshot — version, base,
     operation, file/segment counts, delete state, schema width. Pure

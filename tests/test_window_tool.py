@@ -187,3 +187,24 @@ def test_container_constant_queues_inner_callables():
     units = window_tool._obj_units(probe)
     key = "s3_kinesis_replay_spark.operators.similarity:data_fingerprint"
     assert key in units and "def data_fingerprint" in units[key]
+
+
+def test_sql_statement_handlers_are_hash_units():
+    """Every handler in catalog's SQL statement table is a unit of the
+    resolve_dml hash closure, and reaches its table_format verbs there,
+    so editing a handler or a verb marks the DML entries changed. The
+    tool does not follow closure cells: a handler wrapped in a closure,
+    lambda or functools.partial would hide its body from the hash."""
+    import inspect
+
+    from s3_kinesis_replay_spark import catalog
+
+    units = window_tool._obj_units(catalog.resolve_dml)
+    for _pattern, handler, _needs in catalog._STATEMENTS:
+        assert inspect.isfunction(handler) and handler.__closure__ is None
+        assert getattr(catalog, handler.__name__) is handler
+        assert f"{catalog.__name__}:{handler.__qualname__}" in units
+    tf = "s3_kinesis_replay_spark.operators.table_format"
+    for verb in ("snapshot_delete_where", "snapshot_detail",
+                 "snapshot_partitions", "refresh_dependent_views"):
+        assert f"{tf}:{verb}" in units
