@@ -928,154 +928,6 @@ def _write_key_indexes(
     return out
 
 
-def _pa_row_key_hashes(paths: list[str], kl: list[str]):
-    """Per-ROW (non-distinct) key hashes across parquet files, one
-    pyarrow pass over the key columns only: returns
-    ``(n_nonnull, n_null, hashes | None)`` where ``hashes`` covers the
-    null-free key rows (None when the type has no canonical hash).
-    Returns None when any file cannot be read — callers fall back to
-    the Spark path. r17 (guide §5: the driver should do almost no data
-    work, but a merge SOURCE is O(batch) by contract and its key
-    columns are already being read here for the kidx sidecars)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        tbl = pa.concat_tables(
-            [pq.read_table(p, columns=kl) for p in paths]
-        )
-        nonnull = tbl.drop_null()
-        n_null = len(tbl) - len(nonnull)
-        hashes = None
-        for k in kl:
-            h = _hash_arrow_column(nonnull.column(k).combine_chunks())
-            if h is None:
-                return len(nonnull), n_null, None
-            hashes = h if hashes is None else _mix2_np(hashes, h)
-        return len(nonnull), n_null, hashes
-    except Exception:
-        return None
-
-
-def _pa_write_del_table(root: str, keys) -> list[str]:
-    """Write one delete-key parquet file from an in-memory pyarrow
-    table; returns the relative file list for the delete segment."""
-    import pyarrow.parquet as pq
-
-    part = f"del-{uuid.uuid4().hex[:12]}"
-    os.makedirs(os.path.join(root, "data", part))
-    rel = os.path.join(
-        "data", part, f"part-00000-{uuid.uuid4().hex[:8]}.parquet"
-    )
-    pq.write_table(keys, os.path.join(root, rel))
-    return [rel]
-
-
-def _pa_write_key_file(
-    root: str, paths: list[str], kl: list[str]
-) -> list[str]:
-    """Write a merge's delete-key file directly with pyarrow from the
-    just-written data files' key columns — identical content to the old
-    ``spark.read(...).select(keys).write`` round trip (every source
-    row's keys, nulls included; readers drop nulls), without the Spark
-    job. Returns the relative file list for the delete segment."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    keys = pa.concat_tables([pq.read_table(p, columns=kl) for p in paths])
-    return _pa_write_del_table(root, keys)
-
-
-def _clause_audit_del_fast(root: str, fam_dirs: list[str], kl: list[str]):
-    """ONE pyarrow pass over the materialized clause-family files (r17,
-    VERDICT r16 item 5): the partial-key audit and the distinct
-    delete-key file both derive from the flat ``__mrgk_*`` key columns
-    + the window-computed ``__n_tot`` that the family queries now
-    materialize — replacing the old audit's SECOND full pass over the
-    target (cur semi-join + groupBy + collect) and the Spark
-    read-back+rewrite of the tombstone keys. Exact values end to end
-    (pyarrow group_by, no hashing). Returns the delete-segment file
-    list, or None to fall back to the Spark path; raises the same
-    partial-key ValueError on a genuine violation."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    kcols = [f"__mrgk_{i}" for i in range(len(kl))]
-    try:
-        tables = []
-        for d in fam_dirs:
-            for f in os.listdir(d):
-                if f.startswith("part-") and f.endswith(".parquet"):
-                    tables.append(
-                        pq.read_table(
-                            os.path.join(d, f), columns=kcols + ["__n_tot"]
-                        )
-                    )
-        if not tables:
-            return []
-        t = pa.concat_tables(tables)
-        if len(t) == 0:
-            return []
-        # audit over null-free key rows only — mirrors the Spark
-        # audit's inner join on key equality, which never compared
-        # null-key groups
-        nn = t.drop_null()
-        if len(nn):
-            g = nn.group_by(kcols).aggregate(
-                [("__n_tot", "min"), ("__n_tot", "count")]
-            )
-            n_aff = pc.cast(g.column("__n_tot_count"), "int64")
-            n_tot = pc.cast(g.column("__n_tot_min"), "int64")
-            bad = pc.not_equal(n_aff, n_tot).to_pylist()
-            if any(bad):
-                i = bad.index(True)
-                badkey = tuple(
-                    g.column(c)[i].as_py() for c in kcols
-                )
-                raise ValueError(
-                    f"merge clause affects {n_aff[i].as_py()} of "
-                    f"{n_tot[i].as_py()} rows for key "
-                    f"{badkey!r} — duplicate-key targets where a "
-                    "condition splits a key's rows cannot be expressed "
-                    "with key-granular tombstones; use predicate "
-                    "UPDATE/DELETE WHERE instead"
-                )
-        keys = (
-            t.select(kcols)
-            .group_by(kcols)
-            .aggregate([])
-            .rename_columns(kl)
-        )
-        return _pa_write_del_table(root, keys)
-    except ValueError:
-        raise
-    except Exception:
-        return None
-
-
-def _source_keys_clean_fast(paths: list[str], kl: list[str]) -> bool:
-    """pyarrow FAST PATH for the MERGE source-uniqueness rule: True
-    means PROVABLY clean (zero NULL keys and all per-row key hashes
-    distinct — hash-distinct implies key-distinct); False means
-    UNKNOWN (unreadable, unhashable type, or duplicate hashes — which
-    may be a 2^-64 collision), in which case the caller must run the
-    exact Spark aggregation. Replaces one Spark job per MERGE in the
-    common clean-source case (r17, VERDICT r16 item 5: the live-drain
-    entries pay one such job per micro-batch)."""
-    import numpy as np
-
-    res = _pa_row_key_hashes(paths, kl)
-    if res is None:
-        return False
-    n_nonnull, n_null, hashes = res
-    return (
-        n_null == 0
-        and hashes is not None
-        and len(np.unique(hashes)) == n_nonnull
-    )
-
-
 def _kidx_hash_set(values):
     """Delete keys → sorted uint64 hash array (computed once per
     commit; keys are small by construction). Scalars are single-column
@@ -3614,7 +3466,11 @@ def snapshot_merge(
     cleanly via base validation + bounded retry. Add-column schema
     evolution applies to the source like any append; CDC refuses to
     cross a merge (it is not row-append-only). ``key_col`` may be an
-    ordered column LIST (composite natural key, r16)."""
+    ordered column LIST (composite natural key).
+
+    The source-key check (:func:`_refuse_ambiguous_source`) and the
+    delete-key write are Spark jobs over the written files: the driver
+    plans and commits, and no key row is collected to it."""
     kl = _key_list(key_col)
     if latest_version(root) == 0:
         raise ValueError(
@@ -3638,43 +3494,18 @@ def snapshot_merge(
             for p in new_files
         ],
     )
-    # Delete keys come from the WRITTEN files, not a second evaluation
-    # of ``source`` (review r12): a non-deterministic source (sampling,
-    # rand(), a concurrently-changing input) would otherwise tombstone
-    # keys that diverge from the rows actually appended. Reading back
-    # the fresh files is also cheaper than re-running the source plan.
-    #
-    # r17 (VERDICT r16 item 5): the ambiguity check and the delete-key
-    # file both derive from the key COLUMNS of the just-written files —
-    # exactly what the kidx pass already reads with pyarrow. The fast
-    # path below replaces TWO Spark jobs per merge (the countDistinct
-    # ambiguity agg + the read-back-and-rewrite of the key projection)
-    # with one pyarrow pass; any doubt (unreadable file, unhashable key
-    # type, duplicate hashes — possibly a 2^-64 collision) falls back
-    # to the exact Spark path, so refusals stay exact.
-    abs_new = [os.path.join(root, p) for p in new_files]
-
-    def _written() -> DataFrame:
-        return spark.read.parquet(*abs_new)
-
-    written = None
-    if new_files and _source_keys_clean_fast(abs_new, kl):
-        del_files = _pa_write_key_file(root, abs_new, kl)
-    else:
-        written = _written()
-        _refuse_ambiguous_source(written, kl, "merge")
-        del_files = None
+    # The ambiguity check, the constraints and the delete keys all read
+    # the WRITTEN files, not a second evaluation of ``source``: a
+    # non-deterministic source (sampling, rand(), a concurrently-changing
+    # input) would otherwise tombstone keys that diverge from the rows
+    # actually appended. Reading back the fresh files is also cheaper
+    # than re-running the source plan.
+    written = spark.read.parquet(*[os.path.join(root, p) for p in new_files])
+    _refuse_ambiguous_source(written, kl, "merge")
     cons = table_constraints(root)
     if cons:
-        if written is None:
-            written = _written()
         _enforce_constraints(written, cons, f"snapshot_merge into {root}")
-    if del_files is None:
-        if written is None:
-            written = _written()
-        del_files = _write_data_files(
-            written.select(*kl), root, prefix="del"
-        )
+    del_files = _write_data_files(written.select(*kl), root, prefix="del")
     validated = {"cons": cons}
     dseg = _write_segment(root, [{"path": p} for p in del_files])
     new_schema = _schema_of(source)
@@ -3688,7 +3519,7 @@ def snapshot_merge(
         cur_cons = m.get("constraints") or {}
         if cur_cons != validated["cons"]:
             _enforce_constraints(
-                _written(), cur_cons,
+                written, cur_cons,
                 f"snapshot_merge into {root} (constraints changed "
                 "concurrently)",
             )
@@ -3825,12 +3656,12 @@ def snapshot_merge_clauses(
     key_col,
     clauses: list[dict],
 ) -> int:
-    """CLAUSE-FORM MERGE (r15, VERDICT r14 item 3 — the statement every
-    Delta/Iceberg SQL user writes first), one atomic commit on the same
-    MOR primitives as :func:`snapshot_merge` (new data files + one
-    equality delete-key file, sequence-scoped at read). ``key_col`` is
-    the row identity — a column name or an ordered column LIST
-    (composite natural key, r16: ``ON t.a = s.a AND t.b = s.b``).
+    """CLAUSE-FORM MERGE (the statement every Delta/Iceberg SQL user
+    writes first), one atomic commit on the same MOR primitives as
+    :func:`snapshot_merge` (new data files + one equality delete-key
+    file, sequence-scoped at read). ``key_col`` is the row identity — a
+    column name or an ordered column LIST (composite natural key:
+    ``ON t.a = s.a AND t.b = s.b``).
     ``clauses`` is an ORDERED list of dicts:
 
     * ``{"kind": "update", "cond": sql|None, "sets": {col: sql}}`` —
@@ -3856,10 +3687,10 @@ def snapshot_merge_clauses(
     removed keys. One commit adds (updated ∪ inserted) rows and
     tombstones (updated ∪ deleted ∪ nbs-deleted) keys.
 
-    SINGLE-EVALUATION VERDICTS (r16, ADVICE r15 medium): each clause
-    FAMILY (matched / insert / not-matched-by-source) evaluates its
-    conditions EXACTLY ONCE, as one first-match-wins CASE over one
-    join, and the classified affected rows are MATERIALIZED to parquet;
+    SINGLE-EVALUATION VERDICTS: each clause FAMILY (matched / insert /
+    not-matched-by-source) evaluates its conditions EXACTLY ONCE, as one
+    first-match-wins CASE over one join, and the classified affected
+    rows are MATERIALIZED to parquet;
     adds, tombstone keys, and the partial-key audit all derive from
     that one materialization. Upstream engines evaluate MERGE in a
     single job for the same reason: a non-deterministic condition
@@ -3867,7 +3698,10 @@ def snapshot_merge_clauses(
     and the adds query could silently drop or duplicate rows inside
     one "atomic" commit. Materialization is bounded by AFFECTED rows
     (matched ∩ eligible, eligible inserts, eligible NBS rows), never
-    the full table.
+    the full table. The source-key check, the partial-key audit (one
+    aggregate over the materialized families) and the delete-key write
+    are Spark jobs; the driver plans and commits, and no key row is
+    collected to it.
 
     Refusals, all loud: SET on a key column (a key-granular delete
     cannot express a key rewrite); a key whose target rows are only
@@ -3880,12 +3714,11 @@ def snapshot_merge_clauses(
     zero table rewrite — the snapshot_merge economics with conditional
     semantics.
 
-    Concurrency (r16, VERDICT r15 item 4): the clause verdicts are
-    evaluated against ONE target version, so a blind retry over a
-    concurrent commit would apply stale verdicts (the snapshot_compact
-    rewrite-validation rule). On CommitConflict the statement now runs
-    the Delta-style KEY-DISJOINT check (:func:`_relink_clause_merge_
-    safe`): if every interleaved commit is row-preserving or touches
+    Concurrency: the clause verdicts are evaluated against ONE target
+    version, so a blind retry over a concurrent commit would apply stale
+    verdicts (the snapshot_compact rewrite-validation rule). On
+    CommitConflict the statement runs the Delta-style KEY-DISJOINT
+    check (:func:`_relink_clause_merge_safe`): if every interleaved commit is row-preserving or touches
     only keys provably disjoint from this statement's KEY FOOTPRINT —
     its full read set (every source key) plus tombstones/adds —
     (kidx/sidecar evidence, bounded reads), the already-evaluated
@@ -3894,7 +3727,7 @@ def snapshot_merge_clauses(
     caller re-runs. Anything unprovable (overlapping keys, NBS
     statements racing row changes, rewrites, pos-delete commits)
     surfaces as CommitConflict and the caller re-runs the statement
-    against the new head, exactly as before."""
+    against the new head."""
     import shutil as _shutil
 
     kl = _key_list(key_col)
@@ -3940,20 +3773,14 @@ def snapshot_merge_clauses(
 
     source.write.mode("error").parquet(os.path.join(tmp, "src"))
     try:
-        src_parts = [
-            os.path.join(tmp, "src", f)
+        if any(
+            f.startswith("part-")
             for f in os.listdir(os.path.join(tmp, "src"))
-            if f.startswith("part-")
-        ]
-        if src_parts:
+        ):
             src = spark.read.parquet(os.path.join(tmp, "src"))
+            _refuse_ambiguous_source(src, kl, "merge")
         else:
             src = spark.createDataFrame([], source.schema)
-        # r17: pyarrow fast path over the materialized source's key
-        # columns (see _source_keys_clean_fast) — the exact Spark agg
-        # runs only when cleanliness is not provable
-        if src_parts and not _source_keys_clean_fast(src_parts, kl):
-            _refuse_ambiguous_source(src, kl, "merge")
         base0 = latest_version(root)
         cur = snapshot_read(spark, root, base0)
         tcols = cur.columns
@@ -4000,7 +3827,7 @@ def snapshot_merge_clauses(
         on_cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in kl)
         key_sel = ", ".join(f"t.`{k}` AS `{k}`" for k in kl)
         scols = src.columns
-        # r17: flat key copies + the per-key visible-row total, computed
+        # flat key copies + the per-key visible-row total, computed
         # as a window INSIDE the family job (before the verdict filter,
         # so the count covers every matched/unmatched row of the key) —
         # what the audit below consumes without re-scanning the target.
@@ -4037,7 +3864,7 @@ def snapshot_merge_clauses(
 
         adds: list[DataFrame] = []
         tomb: list[DataFrame] = []  # key frames to tombstone
-        audit: list[DataFrame] = []  # per-ROW key hits for the audit
+        fams: list[str] = []  # materialized views carrying the audit cols
 
         def set_proj(sets: dict[str, str]) -> str:
             return ", ".join(
@@ -4061,9 +3888,8 @@ def snapshot_merge_clauses(
                 ),
                 "m",
             )
-            keys_df = q(f"SELECT {key_sel} FROM {mv}")
-            tomb.append(keys_df)
-            audit.append(keys_df)
+            tomb.append(q(f"SELECT {key_sel} FROM {mv}"))
+            fams.append(mv)
             for i, c in enumerate(mfam):
                 if c["kind"] == "update":
                     adds.append(
@@ -4128,9 +3954,8 @@ def snapshot_merge_clauses(
             # NBS rows' conditions reference the TARGET only (the anti
             # join has no source side); the condition may still split
             # duplicate-key rows — audited below with the rest
-            keys_df = q(f"SELECT {key_sel} FROM {nv}")
-            tomb.append(keys_df)
-            audit.append(keys_df)
+            tomb.append(q(f"SELECT {key_sel} FROM {nv}"))
+            fams.append(nv)
             for i, c in enumerate(nfam):
                 if c["kind"] == "nbs_update":
                     adds.append(
@@ -4141,50 +3966,31 @@ def snapshot_merge_clauses(
                     )
 
         # partial-key audit: every affected key's row count must equal
-        # its total visible row count — otherwise a key-granular
-        # tombstone would silently drop the unaffected duplicates.
-        # r17 fast path: audit AND the distinct tombstone-key file come
-        # from one pyarrow pass over the already-materialized family
-        # files (see _clause_audit_del_fast — the window-computed
-        # __n_tot replaces the old second pass over the target); the
-        # Spark path below remains the fallback.
-        fam_dirs = []
-        if mfam:
-            fam_dirs.append(os.path.join(tmp, "m"))
-        if nfam:
-            fam_dirs.append(os.path.join(tmp, "n"))
-        del_files_fast = (
-            _clause_audit_del_fast(root, fam_dirs, kl) if audit else []
-        )
-        if audit and del_files_fast is None:
-            aff = audit[0]
-            for a in audit[1:]:
-                aff = aff.unionByName(a)
-            per_aff = aff.groupBy(*kl).agg(
-                F.count(F.lit(1)).alias("__n_aff")
-            )
-            per_tot = (
-                cur.join(F.broadcast(per_aff.select(*kl)), kl,
-                         "left_semi")
-                .groupBy(*kl)
-                .agg(F.count(F.lit(1)).alias("__n_tot"))
-            )
-            bad = (
-                per_aff.join(per_tot, kl)
-                .where(F.col("__n_aff") != F.col("__n_tot"))
-                .limit(1)
-                .collect()
-            )
+        # its total visible row count (the window-computed __n_tot) —
+        # otherwise a key-granular tombstone would silently drop the
+        # unaffected duplicates. One aggregate over the materialized
+        # families; NULL keys never match a tombstone and are skipped.
+        if fams:
+            mk = [f"`__mrgk_{i}`" for i in range(len(kl))]
+            bad = q(
+                f"SELECT {', '.join(mk)}, count(*) AS n_aff, "
+                "min(__n_tot) AS n_tot FROM ("
+                + " UNION ALL ".join(
+                    f"SELECT {', '.join(mk)}, __n_tot FROM {v}" for v in fams
+                )
+                + ") WHERE "
+                + " AND ".join(f"{c} IS NOT NULL" for c in mk)
+                + f" GROUP BY {', '.join(mk)} "
+                "HAVING count(*) <> min(__n_tot) LIMIT 1"
+            ).collect()
             if bad:
                 r = bad[0]
-                badkey = tuple(r[k] for k in kl)
                 raise ValueError(
-                    f"merge clause affects {r['__n_aff']} of "
-                    f"{r['__n_tot']} rows for key "
-                    f"{badkey!r} — duplicate-key targets where a "
-                    "condition splits a key's rows cannot be expressed "
-                    "with key-granular tombstones; use predicate "
-                    "UPDATE/DELETE WHERE instead"
+                    f"merge clause affects {r['n_aff']} of {r['n_tot']} "
+                    f"rows for key {tuple(r[:len(kl)])!r} — duplicate-key "
+                    "targets where a condition splits a key's rows cannot "
+                    "be expressed with key-granular tombstones; use "
+                    "predicate UPDATE/DELETE WHERE instead"
                 )
 
         add_rows = None
@@ -4235,8 +4041,6 @@ def snapshot_merge_clauses(
         )
         if del_keys is None:
             del_files = []
-        elif del_files_fast is not None:
-            del_files = del_files_fast
         else:
             del_files = _write_data_files(
                 del_keys.select(*kl).distinct(), root, prefix="del"

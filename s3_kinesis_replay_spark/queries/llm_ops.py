@@ -2614,7 +2614,10 @@ from fractions import Fraction as _LshFraction
 _LSH_FR = _LshFraction(LSH_RECALL_FLOOR).limit_denominator(10**6)
 _LSH_NUM, _LSH_DEN = _LSH_FR.numerator, _LSH_FR.denominator
 
-_LSH_CAL_FRACS = (0.3, 0.5, 0.7, 0.9)
+# variant i keeps max(3, floor(n * t / 10)) of a doc's n tokens, in
+# integer arithmetic on both sides (a double or DECIMAL product floors
+# 90 * 0.7 differently: 62 in Spark, 63 in DuckDB)
+_LSH_CAL_TENTHS = (3, 5, 7, 9)
 
 
 def _duck_lsh_corpus() -> str:
@@ -2623,10 +2626,10 @@ def _duck_lsh_corpus() -> str:
     parts = [
         "SELECT doc_id, 0 AS j, array_to_string(toks, ' ') AS text FROM d"
     ]
-    for j, f in enumerate(_LSH_CAL_FRACS, 1):
+    for j, t10 in enumerate(_LSH_CAL_TENTHS, 1):
         parts.append(
             f"SELECT doc_id, {j}, array_to_string(list_slice(toks, 1, "
-            f"GREATEST(3, CAST(FLOOR(len(toks) * {f}) AS INT))), ' ') FROM d"
+            f"GREATEST(3, len(toks) * {t10} // 10)), ' ') FROM d"
         )
     return "\n      UNION ALL ".join(parts)
 
@@ -2720,10 +2723,8 @@ def i21_lsh_calibration(spark, sf_dir):
             F.array_join("toks", " ").alias("text"),
         )
     ]
-    for j, f in enumerate(_LSH_CAL_FRACS, 1):
-        keep = F.greatest(
-            F.lit(3), F.floor(F.size("toks") * F.lit(f)).cast("int")
-        )
+    for j, t10 in enumerate(_LSH_CAL_TENTHS, 1):
+        keep = F.expr(f"greatest(3, size(toks) * {t10} div 10)").cast("int")
         parts.append(
             d.select(
                 (F.col("doc_id") * 8 + j).alias("vid"),

@@ -212,10 +212,16 @@ def stream_archive(
         reader = reader.option("pathGlobFilter", glob)
     path = root
     if dt_start is not None or dt_end is not None:
+        # list through the session's Hadoop FileSystem, so a URI root
+        # (file:, s3a:, any bound scheme) resolves as Spark resolves it
+        hroot = spark._jvm.org.apache.hadoop.fs.Path(root)
+        fs = hroot.getFileSystem(
+            spark._jsparkSession.sessionState().newHadoopConf()
+        )
         dts = sorted(
-            p.name[3:]
-            for p in Path(root).iterdir()
-            if p.is_dir() and p.name.startswith("dt=")
+            st.getPath().getName()[3:]
+            for st in fs.listStatus(hroot)
+            if st.isDirectory() and st.getPath().getName().startswith("dt=")
         )
         sel = [
             d

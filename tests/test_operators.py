@@ -3815,33 +3815,59 @@ def test_snapshot_as_of_timestamp_travel(spark, sf_dir, tmp_path):
         tf.snapshot_as_of(spark, root, t0 - 10)
 
 
+def _assert_merge_refusal_left_no_trace(root):
+    """A refused MERGE on a table that has only its initial load commits
+    nothing, drops its ``tmpmerge-*`` source copy and leaves no
+    delete-key directory (``data/del-*``; none is committed yet)."""
+    import os
+
+    from s3_kinesis_replay_spark.operators import table_format as tf
+
+    assert tf.versions(root) == [1]
+    assert not [d for d in os.listdir(root) if d.startswith("tmpmerge-")]
+    assert not [
+        d for d in os.listdir(os.path.join(root, "data"))
+        if d.startswith("del-")
+    ]
+
+
 def test_merge_refuses_ambiguous_source(spark, sf_dir, tmp_path):
-    """MERGE refuses a source with duplicate or NULL keys (real MERGE
-    INTO's multi-match error): silently appending both rows would
-    materialize two rows under one identity forever."""
+    """Both MERGE verbs refuse a source with duplicate or NULL keys,
+    single-column or composite (real MERGE INTO's multi-match error):
+    silently appending both rows would materialize two rows under one
+    identity forever. A refusal leaves no version and no stray files."""
     import pytest as _pytest
 
     from s3_kinesis_replay_spark.operators import table_format as tf
 
     root = str(tmp_path / "tbl")
+    schema = "id long, g string, val double"
     tf.snapshot_write(
         spark,
-        spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, val double"),
+        spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], schema),
         root,
         "overwrite",
     )
-    dup = spark.createDataFrame(
-        [(1, 10.0), (1, 11.0)], "id long, val double"
-    )
-    with _pytest.raises(ValueError, match="ambiguous"):
-        tf.snapshot_merge(spark, root, dup, "id")
-    nullk = spark.createDataFrame(
-        [(None, 5.0)], "id long, val double"
-    )
-    with _pytest.raises(ValueError, match="ambiguous"):
-        tf.snapshot_merge(spark, root, nullk, "id")
-    # the refused merges left no committed version behind
-    assert tf.versions(root) == [1]
+    upd = [{"kind": "update", "cond": None, "sets": {"val": "s.val"}}]
+    verbs = {
+        "merge": lambda src, key: tf.snapshot_merge(spark, root, src, key),
+        "merge_clauses": lambda src, key: tf.snapshot_merge_clauses(
+            spark, root, src, key, upd
+        ),
+    }
+    cases = {
+        "duplicate": ("id", [(1, "a", 10.0), (1, "b", 11.0)]),
+        "null": ("id", [(None, "a", 5.0)]),
+        "composite_duplicate": (
+            ["id", "g"], [(1, "a", 10.0), (1, "a", 11.0), (1, "b", 12.0)]
+        ),
+    }
+    for verb, run in verbs.items():
+        for case, (key, rows) in cases.items():
+            src = spark.createDataFrame(rows, schema)
+            with _pytest.raises(ValueError, match="ambiguous"):
+                run(src, key)
+            _assert_merge_refusal_left_no_trace(root)
 
 
 def test_legacy_lineage_append_stays_schemaless(spark, sf_dir, tmp_path):
@@ -5589,6 +5615,27 @@ def test_snapshot_merge_clauses(spark, sf_dir, tmp_path):
             "MERGE INTO mrgc_t3 USING (SELECT 1 AS k) ON k "
             "WHEN MATCHED AND t.val = 10 THEN DELETE",
         )
+    _assert_merge_refusal_left_no_trace(root3)
+    # the same on a composite key, through the verb itself
+    root4 = str(tmp_path / "t4")
+    tf.snapshot_write(
+        spark,
+        spark.createDataFrame(
+            [(1, "x", 10), (1, "x", 20), (1, "y", 30), (2, "x", 5)],
+            "a long, b string, val long",
+        ),
+        root4,
+        "overwrite",
+    )
+    with _pytest.raises(ValueError, match=r"1 of 2 rows for key \(1, 'x'\)"):
+        tf.snapshot_merge_clauses(
+            spark,
+            root4,
+            spark.createDataFrame([(1, "x"), (1, "y")], "a long, b string"),
+            ["a", "b"],
+            [{"kind": "delete", "cond": "t.val IN (10, 30)"}],
+        )
+    _assert_merge_refusal_left_no_trace(root4)
     # whole-key clauses on duplicate-key targets still work
     cat.resolve_dml(
         spark,

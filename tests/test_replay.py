@@ -1021,6 +1021,54 @@ def test_stream_dt_range_prunes_at_listing(spark, sf_dir, archive_root, tmp_path
     assert spark.sql("SELECT COUNT(*) n FROM dt_empty_replay").collect()[0]["n"] == 0
 
 
+def test_stream_dt_window_on_uri_roots(spark, archive_root, tmp_path):
+    """The dt window lists the archive through the session's Hadoop
+    FileSystem: a ``file://`` root and a root on a scheme bound only in
+    the session conf (``graftlocal``, a Hadoop mount table linking
+    ``graftlocal://mt/archive`` to the archive on local disk) replay the
+    same rows as the plain-path root. A ``pathlib`` listing raised
+    ``FileNotFoundError`` on both."""
+    import glob as _glob
+
+    dts = sorted(
+        {p.split("dt=")[1].split("/")[0]
+         for p in _glob.glob(f"{archive_root}/dt=*")}
+    )
+    lo, hi = dts[0], dts[1]
+    binds = {
+        "fs.graftlocal.impl":
+            "org.apache.hadoop.fs.viewfs.ViewFileSystemOverloadScheme",
+        "fs.viewfs.mounttable.mt.link./archive": f"file://{archive_root}",
+    }
+    for k, v in binds.items():
+        spark.conf.set(k, v)
+    try:
+        got = {}
+        for form, root in {
+            "plain": archive_root,
+            "file": f"file://{archive_root}",
+            "graftlocal": "graftlocal://mt/archive",
+        }.items():
+            q = (
+                stream_archive(spark, root, dt_start=lo, dt_end=hi)
+                .writeStream.format("memory")
+                .queryName(f"dt_uri_{form}")
+                .option("checkpointLocation", str(tmp_path / form))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(300)
+            got[form] = sorted(
+                tuple(r) for r in spark.table(f"dt_uri_{form}").collect()
+            )
+    finally:
+        for k in binds:
+            spark.conf.unset(k)
+    assert got["plain"]
+    assert got["file"] == got["plain"]
+    assert got["graftlocal"] == got["plain"]
+
+
 def test_stage_atomicity_failed_build_leaves_nothing(tmp_path, monkeypatch):
     """Review r8: staging builds in a temp tree and renames atomically —
     a failed build must leave NO root (a reader can never observe a

@@ -43,6 +43,7 @@ Usage:
 from __future__ import annotations
 
 import ast
+import functools
 import hashlib
 import inspect
 import json
@@ -123,15 +124,140 @@ def _namespace_for(obj) -> dict:
     return dict(g)
 
 
-def _obj_units(root_fn) -> dict[str, str]:
+# obj -> (file stamps it was computed from, its own units, the in-package
+# objects it references); reused while every stamped file is unchanged
+_STEP_CACHE: dict = {}
+
+
+def _stamp(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def _obj_step(obj, stamp) -> tuple[dict[str, str], list]:
+    """One object's own content units (its source, the files of modules
+    it references bare, the constants it reads) and the in-package
+    functions/classes it references, in discovery order. Memoized per
+    object, keyed by the (mtime, size) of every file read for it."""
+    hit = _STEP_CACHE.get(obj)
+    if hit is not None and all(stamp(f) == st for f, st in hit[0].items()):
+        return hit[1], hit[2]
+    import importlib
+
+    files: dict[str, tuple[int, int] | None] = {}
+    try:
+        f = inspect.getfile(obj)
+        files[f] = stamp(f)
+    except TypeError:
+        pass
+    units: dict[str, str] = {}
+    refs: list = []
+
+    def read_file(f: str) -> str:
+        files[f] = stamp(f)
+        return Path(f).read_text(errors="replace")
+
+    _STEP_CACHE[obj] = (files, units, refs)
+    try:
+        src = textwrap.dedent(inspect.getsource(obj))
+    except (OSError, TypeError):
+        return units, refs
+    key = (
+        f"{getattr(obj, '__module__', '?')}:"
+        f"{getattr(obj, '__qualname__', getattr(obj, '__name__', '?'))}"
+    )
+    units[key] = src
+    try:
+        tree = ast.parse(src)
+    except SyntaxError:  # pragma: no cover — sources always parse
+        return units, refs
+    g = _namespace_for(obj)
+    # imports inlined in the body extend the namespace
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.ImportFrom)
+            and node.module
+            and node.module.startswith("s3_kinesis_replay_spark")
+        ):
+            try:
+                m = importlib.import_module(node.module)
+            except ImportError:  # pragma: no cover
+                continue
+            for a in node.names:
+                g.setdefault(a.asname or a.name, getattr(m, a.name, m))
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.startswith("s3_kinesis_replay_spark"):
+                    try:
+                        m = importlib.import_module(a.name)
+                    except ImportError:  # pragma: no cover
+                        continue
+                    g.setdefault(a.asname or a.name.split(".")[0], m)
+    # collect referenced names + per-module attribute uses
+    attr_uses: dict[str, set[str]] = {}
+    names: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+            attr_uses.setdefault(node.value.id, set()).add(node.attr)
+            names.add(node.value.id)
+        elif isinstance(node, ast.Name):
+            names.add(node.id)
+    owner = getattr(obj, "__module__", "?")
+    for name in sorted(names):
+        tgt = g.get(name)
+        if tgt is None:
+            continue
+        if inspect.ismodule(tgt):
+            if not _in_package(tgt):
+                continue
+            fallback = not attr_uses.get(name)  # bare module reference
+            for attr in sorted(attr_uses.get(name, ())):
+                sub = getattr(tgt, attr, None)
+                if inspect.isfunction(sub) or inspect.isclass(sub):
+                    if _in_package(sub):
+                        refs.append(sub)
+                elif inspect.ismodule(sub):
+                    # dotted submodule access (pkg.submod.fn): hash the
+                    # SUBMODULE's file, not just the parent package's —
+                    # a parent-file fallback would leave dependents
+                    # green across submodule edits (ADVICE r6)
+                    sf = getattr(sub, "__file__", None)
+                    if _in_package(sub) and sf:
+                        units[f"file:{sub.__name__}"] = read_file(sf)
+                    elif _in_package(tgt):
+                        fallback = True
+                elif sub is None:
+                    fallback = True
+                else:
+                    units[f"{tgt.__name__}:{attr}"] = _stable_repr(sub)
+                    refs.extend(_container_callables(sub))
+            if fallback:
+                f = getattr(tgt, "__file__", None)
+                if f:
+                    units[f"file:{tgt.__name__}"] = read_file(f)
+        elif inspect.isfunction(tgt) or inspect.isclass(tgt):
+            if _in_package(tgt):
+                refs.append(tgt)
+        elif callable(tgt) or inspect.isbuiltin(tgt):
+            continue  # out-of-package callables (F.col, builtins, ...)
+        else:
+            # module-level constant read by this fn (could be a local
+            # shadowing a global — a spurious-but-stable extra unit)
+            units[f"const:{owner}:{name}"] = _stable_repr(tgt)
+            refs.extend(_container_callables(tgt))
+    return units, refs
+
+
+def _obj_units(root_fn, stamp=_stamp) -> dict[str, str]:
     """qualname-keyed content units: the fn's own source plus, transitively
     at OBJECT granularity, every in-package function/class it references
     (via globals or inline imports) and the stable repr of every
     module-level constant it reads. A module referenced bare (or with an
     attribute that cannot be resolved) contributes its whole file as a
     conservative fallback."""
-    import importlib
-
     units: dict[str, str] = {}
     seen: set[int] = set()
     queue = [root_fn]
@@ -140,97 +266,9 @@ def _obj_units(root_fn) -> dict[str, str]:
         if id(obj) in seen:
             continue
         seen.add(id(obj))
-        try:
-            src = textwrap.dedent(inspect.getsource(obj))
-        except (OSError, TypeError):
-            continue
-        key = (
-            f"{getattr(obj, '__module__', '?')}:"
-            f"{getattr(obj, '__qualname__', getattr(obj, '__name__', '?'))}"
-        )
-        units[key] = src
-        try:
-            tree = ast.parse(src)
-        except SyntaxError:  # pragma: no cover — sources always parse
-            continue
-        g = _namespace_for(obj)
-        # imports inlined in the body extend the namespace
-        for node in ast.walk(tree):
-            if (
-                isinstance(node, ast.ImportFrom)
-                and node.module
-                and node.module.startswith("s3_kinesis_replay_spark")
-            ):
-                try:
-                    m = importlib.import_module(node.module)
-                except ImportError:  # pragma: no cover
-                    continue
-                for a in node.names:
-                    g.setdefault(a.asname or a.name, getattr(m, a.name, m))
-            elif isinstance(node, ast.Import):
-                for a in node.names:
-                    if a.name.startswith("s3_kinesis_replay_spark"):
-                        try:
-                            m = importlib.import_module(a.name)
-                        except ImportError:  # pragma: no cover
-                            continue
-                        g.setdefault(a.asname or a.name.split(".")[0], m)
-        # collect referenced names + per-module attribute uses
-        attr_uses: dict[str, set[str]] = {}
-        names: set[str] = set()
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
-                attr_uses.setdefault(node.value.id, set()).add(node.attr)
-                names.add(node.value.id)
-            elif isinstance(node, ast.Name):
-                names.add(node.id)
-        owner = getattr(obj, "__module__", "?")
-        for name in sorted(names):
-            tgt = g.get(name)
-            if tgt is None or tgt is root_fn:
-                continue
-            if inspect.ismodule(tgt):
-                if not _in_package(tgt):
-                    continue
-                fallback = not attr_uses.get(name)  # bare module reference
-                for attr in sorted(attr_uses.get(name, ())):
-                    sub = getattr(tgt, attr, None)
-                    if inspect.isfunction(sub) or inspect.isclass(sub):
-                        if _in_package(sub):
-                            queue.append(sub)
-                    elif inspect.ismodule(sub):
-                        # dotted submodule access (pkg.submod.fn): hash the
-                        # SUBMODULE's file, not just the parent package's —
-                        # a parent-file fallback would leave dependents
-                        # green across submodule edits (ADVICE r6)
-                        sf = getattr(sub, "__file__", None)
-                        if _in_package(sub) and sf:
-                            units[f"file:{sub.__name__}"] = Path(sf).read_text(
-                                errors="replace"
-                            )
-                        elif _in_package(tgt):
-                            fallback = True
-                    elif sub is None:
-                        fallback = True
-                    else:
-                        units[f"{tgt.__name__}:{attr}"] = _stable_repr(sub)
-                        queue.extend(_container_callables(sub))
-                if fallback:
-                    f = getattr(tgt, "__file__", None)
-                    if f:
-                        units[f"file:{tgt.__name__}"] = Path(f).read_text(
-                            errors="replace"
-                        )
-            elif inspect.isfunction(tgt) or inspect.isclass(tgt):
-                if _in_package(tgt):
-                    queue.append(tgt)
-            elif callable(tgt) or inspect.isbuiltin(tgt):
-                continue  # out-of-package callables (F.col, builtins, ...)
-            else:
-                # module-level constant read by this fn (could be a local
-                # shadowing a global — a spurious-but-stable extra unit)
-                units[f"const:{owner}:{name}"] = _stable_repr(tgt)
-                queue.extend(_container_callables(tgt))
+        own, refs = _obj_step(obj, stamp)
+        units.update(own)
+        queue.extend(refs)
     return units
 
 
@@ -244,9 +282,10 @@ def snapshot() -> dict[str, str]:
     import linecache
 
     linecache.checkcache()  # pick up on-disk edits made after import
+    stamp = functools.lru_cache(maxsize=None)(_stamp)  # one stat per file
     out: dict[str, str] = {}
     for name, q in _registration_order().items():
-        units = _obj_units(q.fn)
+        units = _obj_units(q.fn, stamp)
         h = hashlib.sha256()
         for key in sorted(units):
             h.update(key.encode())
